@@ -13,12 +13,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Residency.sweep unpersists localCheckpoint'd per-query scratch by
-    // design; every such unpersist logs a "lineage has been truncated"
-    // WARN from the RDD class. Silence the rdd package here (ERROR
-    // still surfaces) so ~650 expected lines don't flood the capture.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
+    // design; keep its expected WARNs out of the capture
+    Residency.quietSweepWarnings()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // dev loop only (the driver never sets it): SPARK_GRAFT_BENCH_ONLY
     // restricts the run to a comma-separated query subset for A/Bs.

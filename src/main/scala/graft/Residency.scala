@@ -64,6 +64,21 @@ object Residency {
     v
   }
 
+  /** Drop the one WARN each swept checkpoint logs ("RDD n was locally
+    * checkpointed, its lineage has been truncated and cannot be
+    * recomputed after unpersisting"; ~650 expected lines per harness
+    * run). A context-wide message filter, not a logger level: every
+    * other RDD-layer warning still reaches the captured logs. */
+  def quietSweepWarnings(): Unit =
+    try {
+      import org.apache.logging.log4j.core.{Filter, LoggerContext}
+      val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+      ctx.getConfiguration.addFilter(org.apache.logging.log4j.core.filter.RegexFilter.createFilter(
+        ".*was locally checkpointed, its lineage has been truncated.*", null, false,
+        Filter.Result.DENY, Filter.Result.NEUTRAL))
+      ctx.updateLoggers()
+    } catch { case scala.util.control.NonFatal(_) => () }
+
   /** Unpersist every CHECKPOINTED persistent RDD of the session that
     * no [[pinning]] build claimed.
     *

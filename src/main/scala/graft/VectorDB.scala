@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.Kernels
 import graft.index.{HnswGraph, HnswIndex, HnswParams, IvfIndex, ProductQuantizer, ScalarQuantizer}
 import graft.operators.{Knn, TopK}
 
@@ -112,9 +115,13 @@ final class VectorDB private (
 
   /** Beam width for indexed search; <= 0 = the reference's default
     * `max(efConstruction, k)` (`src/lib.rs:164`). Raise to trade
-    * latency for recall; set above the largest cell to make indexed
-    * search exhaustive within probed cells (ANN ≡ exact — what the
-    * oracle-gated query does). */
+    * latency for recall. A beam above the largest cell visits every
+    * node reachable from the entry point, so indexed search is
+    * exhaustive within the probed cells (ANN ≡ exact) only when each
+    * probed cell's layer-0 graph is connected
+    * ([[graft.index.HnswGraph.layer0Components]] == 1); degree-cap
+    * pruning can split a cell's graph, and the nodes cut off from the
+    * entry point are then never served. */
   var efSearch: Int = -1
 
   /** Adaptive probe cutoff ([[IvfIndex.Model.probeAdaptive]]): when
@@ -277,10 +284,8 @@ final class VectorDB private (
     val r: Array[Float] = indexMetric match {
       case Knn.Cosine =>
         val a = q.toArray
-        var s = 0.0
-        var i = 0
-        while (i < a.length) { s += a(i).toDouble * a(i).toDouble; i += 1 }
-        val n = math.sqrt(s)
+        val qa = UnsafeArrayData.fromPrimitiveArray(a)
+        val n = math.sqrt(Kernels.dot(qa, qa)) // l2Normalize's dotNative
         if (n == 0.0) a else a.map(x => (x.toDouble / n).toFloat)
       case Knn.Dot =>
         // 0-extend over the augmentation dim and any PQ zero pad: the
@@ -1436,14 +1441,13 @@ final class VectorDB private (
   private val localCells =
     scala.collection.mutable.LinkedHashMap.empty[Int, Option[Seq[(Array[Long], HnswGraph)]]]
 
-  /** The compressed twin of [[localCells]]: cell id → (ids, codes)
-    * with codes widened to Long words (PQ/SQ int codes and BQ packed
-    * words share one representation — the values are exact integers
-    * either way, so every ADC mirror computes on identical numbers).
-    * Codes are ~d·4/M× smaller than graph rows, so the same row cap
-    * bounds a cached cell to single-digit MB. */
+  /** The compressed twin of [[localCells]]: cell id → (ids, codes),
+    * each code row held as the `ArrayData` the ADC kernels read (PQ/SQ
+    * int codes, BQ packed long words). Codes are ~d·4/M× smaller than
+    * graph rows, so the same row cap bounds a cached cell to
+    * single-digit MB. */
   private val localCodeCells =
-    scala.collection.mutable.LinkedHashMap.empty[Int, Option[(Array[Long], Array[Array[Long]])]]
+    scala.collection.mutable.LinkedHashMap.empty[Int, Option[(Array[Long], Array[ArrayData])]]
 
   /** Load one cell's graphs to the driver: ONE narrow job whose scan is
     * pruned to the cell (on a [[save]]d layout, to its parquet subtree).
@@ -1477,9 +1481,8 @@ final class VectorDB private (
 
   /** Load one cell's (ids, codes) to the driver — [[localCell]]'s
     * compressed twin: one narrow partition-pruned job, the same cap
-    * guard and cap-breach memory. Codes widen to Long (PQ/SQ ints, BQ
-    * packed words — exact integers either way). */
-  private def localCodeCell(c: Int): Option[(Array[Long], Array[Array[Long]])] =
+    * guard and cap-breach memory. */
+  private def localCodeCell(c: Int): Option[(Array[Long], Array[ArrayData])] =
     localCodeCells.remove(c) match {
       case Some(v) => localCodeCells.put(c, v); v // LRU refresh
       case None =>
@@ -1490,9 +1493,9 @@ final class VectorDB private (
           if (rows.length > localCellRowCap) None
           else Some((
             rows.map(_.getLong(0)),
-            rows.map { r =>
-              if (bqState.isDefined) r.getSeq[Long](1).toArray
-              else r.getSeq[Int](1).map(_.toLong).toArray
+            rows.map[ArrayData] { r =>
+              if (bqState.isDefined) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)
+              else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](1).toArray)
             }))
         if (localCodeCells.size >= maxLocalCells)
           localCodeCells.remove(localCodeCells.head._1)
@@ -1500,64 +1503,20 @@ final class VectorDB private (
         v
     }
 
-  /** Driver-side ADC — the bit-exact mirror of the serving kernels
-    * ([[graft.functions.expressions.PqAdc]]/[[graft.functions.expressions.SqAdc]]/
-    * SignPack+HammingWords): same accumulation order (subspace
-    * ascending, dim ascending), same double arithmetic, so the local
-    * distances equal the distributed column values bit-for-bit. `bqQ`
-    * pre-packs the query once per call for the BQ arm. */
-  private def localAdcDist(codes: Array[Long], rq: Array[Float],
-      bqQ: Array[Long]): Double =
-    if (pqState.isDefined) {
-      val m = pqState.get._2
-      var acc = 0.0
-      var s = 0
-      while (s < m.numSub) {
-        val cw = m.codebooks(s)(codes(s).toInt)
-        var d = 0.0
-        var i = 0
-        while (i < m.subDim) {
-          val t = cw(i) - rq(s * m.subDim + i).toDouble
-          d += t * t
-          i += 1
-        }
-        acc += d
-        s += 1
-      }
-      acc
-    } else if (sqState.isDefined) {
-      val (_, lo, hi) = sqState.get
-      var acc = 0.0
-      var i = 0
-      while (i < lo.length) {
-        val dec = lo(i) + codes(i) / 255.0 * (hi(i) - lo(i))
-        val d = dec - rq(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      acc
-    } else {
-      var acc = 0
-      var i = 0
-      while (i < codes.length) {
-        acc += java.lang.Long.bitCount(codes(i) ^ bqQ(i))
-        i += 1
-      }
-      acc.toDouble
+  /** The distributed compressed arm's distance ([[adcDist]]) as a
+    * driver-side function of one code row: the same [[Kernels]] method
+    * over the same model arrays, so local and distributed distances are
+    * equal by construction. `q` is the reduced query. */
+  private def localAdc(q: ArrayData): ArrayData => Double =
+    pqState.map { case (_, m) =>
+      (codes: ArrayData) => Kernels.pqAdc(codes, q, m.flat, m.numSub, m.k, m.subDim)
+    }.orElse(sqState.map { case (_, lo, hi) =>
+      val (l, h) = (lo.toArray, hi.toArray)
+      (codes: ArrayData) => Kernels.sqAdc(codes, q, l, h)
+    }).getOrElse {
+      val packed = Kernels.signPack(q, codesWidth)
+      (codes: ArrayData) => Kernels.hamming(codes, packed).toDouble
     }
-
-  /** The SignPack kernel driver-side: bit i set iff v(i) > 0, 32 bits
-    * per Long word — identical word layout to the stored codes. */
-  private def localSignPack(v: Array[Float]): Array[Long] = {
-    val n = math.min(v.length, codesWidth)
-    val words = new Array[Long]((codesWidth + 31) / 32)
-    var i = 0
-    while (i < n) {
-      if (v(i) > 0f) words(i >> 5) |= 1L << (i & 31)
-      i += 1
-    }
-    words
-  }
 
   /** Driver-local point-query serving — the reference's headline shape
     * (an in-process index answers one query in well under a
@@ -1570,9 +1529,9 @@ final class VectorDB private (
     *
     * COMPRESSED handles serve locally too (round 16): the probed
     * cells' CODES cache instead of graphs (they are the cheapest cells
-    * to hold — M bytes per vector), and the driver ranks them with
-    * bit-exact mirrors of the ADC kernels, so local ≡ distributed on
-    * every serving mode.
+    * to hold — M bytes per vector), and the driver ranks them with the
+    * same ADC kernels the distributed arm evaluates, so local ≡
+    * distributed on every serving mode.
     *
     * Serves EXACTLY what the distributed routed path serves: same
     * probe selection (fixed or adaptive) on the same reduced query,
@@ -1581,8 +1540,8 @@ final class VectorDB private (
     * Cosine and dot handles serve too: the walk runs in the reduced
     * space (unit-normalized / MIPS-augmented — the graph's geometry),
     * then candidates re-score under the intended metric from the
-    * STORED graph vectors, mirroring the distributed re-score pass
-    * (dot is bit-identical — the augmentation coordinate contributes
+    * STORED graph vectors with the distributed re-score pass's
+    * kernels (dot is bit-identical — the augmentation coordinate contributes
     * exactly 0 to the padded-query dot; cosine agrees to float
     * normalization rounding, inside the gates' 3dp). The walk fetches
     * k+8 per sub-part for re-scored metrics so a float-level rank
@@ -1598,17 +1557,17 @@ final class VectorDB private (
     if (servesCompressed && ivfModel.isDefined) {
       require(queryVec.length == dims,
         s"query dimension mismatch: expected $dims, got ${queryVec.length}")
-      // mirror of searchImpl's compressed arm: same reduced query,
-      // same fixed-nprobe probe order, same ADC math, same (dist, id)
-      // ascending cut — driver-side
+      // searchImpl's compressed arm, driver-side: same reduced query,
+      // same fixed-nprobe probe order, same ADC kernel, same (dist, id)
+      // ascending cut
       val rq = reduceQueryVec(queryVec)
       val probes = ivfModel.get.probeOrder(rq).take(nprobe)
       val cells = probes.map(localCodeCell)
       if (cells.exists(_.isEmpty)) return distributed()
-      val bqQ = if (bqState.isDefined) localSignPack(rq) else null
+      val adc = localAdc(UnsafeArrayData.fromPrimitiveArray(rq))
       return cells.flatMap { cOpt =>
         val (ids, codes) = cOpt.get
-        ids.indices.map(i => (ids(i), localAdcDist(codes(i), rq, bqQ)))
+        ids.indices.map(i => (ids(i), adc(codes(i))))
       }.sortBy { case (id, d) => (d, id) }.take(k).toSeq
     }
     val eligible = index.isDefined && ivfModel.isDefined && !servesCompressed
@@ -1618,6 +1577,7 @@ final class VectorDB private (
     // the same driver-side reduction the compressed path uses: probe
     // selection and the graph walk both run in the index's space
     val rq = reduceQueryVec(queryVec)
+    val q = UnsafeArrayData.fromPrimitiveArray(rq)
     val router = ivfModel.get
     val probes = adaptiveAlpha match {
       case Some(a) => router.probeAdaptive(rq, a, nprobe)
@@ -1630,47 +1590,16 @@ final class VectorDB private (
     val ef = if (efSearch > 0) efSearch else math.max(params.efConstruction, fetchK)
     cells.flatMap(_.get).flatMap { case (ids, g) =>
       g.searchEf(rq, fetchK, ef).map { case (ord, d) =>
+        // exactDist's kernels: 1 − cosine, −dot
+        def stored = UnsafeArrayData.fromPrimitiveArray(g.vectorAt(ord))
         val dist = indexMetric match {
-          case Knn.Cosine => localCosineDist(g.vectorAt(ord), rq)
-          case Knn.Dot    => localNegDot(g.vectorAt(ord), rq)
+          case Knn.Cosine => 1.0 - Kernels.cosine(stored, q)
+          case Knn.Dot    => -Kernels.dot(stored, q)
           case _          => d
         }
         (ids(ord), dist)
       }
     }.sortBy { case (id, d) => (d, id) }.take(k).toSeq
-  }
-
-  /** 1 − cosine of two stored-space vectors, sequential double
-    * accumulation with the serving kernel's zero-norm guard — the
-    * driver-side mirror of `cosineNative` (the distributed path
-    * re-scores raw corpus rows with it; cosine is scale-invariant, so
-    * scoring the unit-normalized graph vector agrees to float
-    * normalization rounding). */
-  private def localCosineDist(v: Array[Float], q: Array[Float]): Double = {
-    var dp = 0.0; var nv = 0.0; var nq = 0.0
-    var i = 0
-    val n = math.min(v.length, q.length)
-    while (i < n) {
-      dp += v(i).toDouble * q(i).toDouble
-      nv += v(i).toDouble * v(i).toDouble
-      nq += q(i).toDouble * q(i).toDouble
-      i += 1
-    }
-    if (nv == 0.0 || nq == 0.0) 1.0
-    else 1.0 - dp / (math.sqrt(nv) * math.sqrt(nq))
-  }
-
-  /** −dot over the augmented graph vector and the zero-padded query:
-    * the augmentation coordinate multiplies the pad's 0, so the
-    * accumulated double equals `-dotNative(rawVec, rawQuery)`
-    * bit-for-bit — the exact value the distributed MIPS re-score
-    * serves. */
-  private def localNegDot(v: Array[Float], q: Array[Float]): Double = {
-    var dp = 0.0
-    var i = 0
-    val n = math.min(v.length, q.length)
-    while (i < n) { dp += v(i).toDouble * q(i).toDouble; i += 1 }
-    -dp
   }
 
   /** Metadata-filtered top-k: rows whose id fails `idPred` are never

@@ -24,11 +24,8 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String) = only.forall(_.contains(name))
-    // silence the expected "lineage truncated" WARN that each sweep's
-    // checkpoint unpersist logs (same rationale as Bench)
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
+    // the expected "lineage truncated" WARN of each sweep (as in Bench)
+    Residency.quietSweepWarnings()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

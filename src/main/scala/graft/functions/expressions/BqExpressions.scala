@@ -2,17 +2,18 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 /** Native Catalyst kernels for the binary-quantization hot path
   * (extension — the reference stores raw f32 only,
   * `/root/reference/src/lib.rs:22-26`): the HOF forms in
   * [[graft.index.BinaryQuant]] build an intermediate sequence and box
-  * per bit; these are single-pass branch-light loops inside
-  * whole-stage codegen. Semantics are bit-identical to the HOF forms
-  * (strict `> 0` sign test, tail bits unset, summed `Long.bitCount`
-  * over XOR-ed words) — pinned by the parity spec. */
+  * per bit; these call the single-pass [[Kernels.signPack]] and
+  * [[Kernels.hamming]] loops from eval and generated code alike.
+  * Semantics are bit-identical to the HOF forms (strict `> 0` sign
+  * test, tail bits unset, summed `Long.bitCount` over XOR-ed words) —
+  * pinned by the parity spec. */
 
 /** Pack a float vector's sign bits into ceil(dim/32) 32-bit words held
   * in longs: bit `i` of word `i/32` is set iff component `i` is
@@ -39,34 +40,11 @@ case class SignPack(child: Expression, dim: Int) extends UnaryExpression {
     }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nWords = (dim + 31) / 32
-    val words = new Array[Long](nWords)
-    val n = math.min(v.numElements(), dim)
-    var i = 0
-    while (i < n) {
-      if (v.getFloat(i) > 0f) words(i >> 5) |= 1L << (i & 31)
-      i += 1
-    }
-    new GenericArrayData(words)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.signPack(input.asInstanceOf[ArrayData], dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val words = ctx.freshName("words")
-      val nWords = (dim + 31) / 32
-      s"""
-         |long[] $words = new long[$nWords];
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getFloat($i) > 0f) $words[$i >> 5] |= 1L << ($i & 31);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($words);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${Kernels.Name}.signPack($a, $dim)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -96,41 +74,11 @@ case class HammingWords(left: Expression, right: Expression)
     }
   override def dataType: DataType = IntegerType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (y.numElements() != n)
-      throw new IllegalArgumentException(
-        s"bq_hamming_native: sign patterns packed at different widths " +
-          s"($n vs ${y.numElements()} words)")
-    var acc = 0
-    var i = 0
-    while (i < n) {
-      acc += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i))
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.hamming(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "bq_hamming_native: sign patterns packed at different widths (" +
-         |      $n + " vs " + $b.numElements() + " words)");
-         |}
-         |int ${ev.value}_acc = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}_acc += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${Kernels.Name}.hamming($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

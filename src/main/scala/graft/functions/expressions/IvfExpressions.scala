@@ -5,6 +5,34 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
+/** What [[IvfAssign]] and [[IvfAssignTopK]] share: the flat centroids
+  * (`centroidsFlat(c*dim + i)` = entry i of centroid c), the cell id of
+  * each centroid (empty = the ordinal), and a float or double input. */
+abstract class IvfRouting extends UnaryExpression with Serializable {
+  def centroidsFlat: Array[Double]
+  def cellIds: Array[Int]
+  def dim: Int
+  require(dim > 0 && centroidsFlat.length % dim == 0 && centroidsFlat.nonEmpty,
+    s"centroidsFlat (${centroidsFlat.length}) must be a nonempty multiple of dim ($dim)")
+  require(cellIds.isEmpty || cellIds.length == centroidsFlat.length / dim,
+    s"cellIds (${cellIds.length}) must be empty (identity) or one per centroid " +
+      s"(${centroidsFlat.length / dim})")
+
+  override def nullable: Boolean = true
+
+  protected lazy val floatElems: Boolean = child.dataType match {
+    case ArrayType(FloatType, _)  => true
+    case ArrayType(DoubleType, _) => false
+    case t =>
+      throw new IllegalArgumentException(s"$prettyName needs array<float|double>, got $t")
+  }
+
+  /** Generated-code arguments after the vector: float flag, centroids, cell ids, dim. */
+  protected def modelArgs(ctx: CodegenContext): String =
+    s"$floatElems, ${ctx.addReferenceObj("ivfCentroids", centroidsFlat, "double[]")}, " +
+      s"${ctx.addReferenceObj("ivfCellIds", cellIds, "int[]")}, $dim"
+}
+
 /** Nearest-centroid cell assignment in ONE fused pass: scans all k
   * centroids (`centroidsFlat(c*dim + i)` = entry i of centroid c) and
   * returns the cell id of the closest by squared L2, ties to the
@@ -31,79 +59,20 @@ case class IvfAssign(
     centroidsFlat: Array[Double],
     cellIds: Array[Int],
     dim: Int)
-    extends UnaryExpression {
-  require(dim > 0 && centroidsFlat.length % dim == 0 && centroidsFlat.nonEmpty,
-    s"centroidsFlat (${centroidsFlat.length}) must be a nonempty multiple of dim ($dim)")
-  private val k: Int = centroidsFlat.length / dim
-  require(cellIds.isEmpty || cellIds.length == k,
-    s"cellIds (${cellIds.length}) must be empty (identity) or one per centroid ($k)")
-
+    extends IvfRouting {
   override def prettyName: String = "ivf_assign"
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  private lazy val floatElems: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case t =>
-      throw new IllegalArgumentException(s"ivf_assign needs array<float|double>, got $t")
-  }
 
   override protected def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() < dim) return null
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < k) {
-      val base = c * dim
-      var d = 0.0
-      var i = 0
-      while (i < dim && d < bestD) {
-        val x = if (floatElems) v.getFloat(i).toDouble else v.getDouble(i)
-        val t = centroidsFlat(base + i) - x
-        d += t * t
-        i += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    Integer.valueOf(if (cellIds.isEmpty) best else cellIds(best))
+    if (Kernels.ivfAssignValid(v, dim)) Kernels.ivfAssign(v, floatElems, centroidsFlat, cellIds, dim)
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCentroids", centroidsFlat, "double[]")
-    val idsRef =
-      if (cellIds.isEmpty) "" else ctx.addReferenceObj("ivfCellIds", cellIds, "int[]")
-    val getter = if (floatElems) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, in => {
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val base = ctx.freshName("base")
-      val resolve = if (cellIds.isEmpty) best else s"$idsRef[$best]"
-      s"""
-         |if ($in.numElements() < $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $best = 0;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $base = $c * $dim;
-         |    double $d = 0.0;
-         |    for (int $i = 0; $i < $dim && $d < $bestD; $i++) {
-         |      double $t = $cRef[$base + $i] - (double) $in.$getter($i);
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |  }
-         |  ${ev.value} = $resolve;
-         |}
-       """.stripMargin
-    })
+    val args = modelArgs(ctx)
+    nullSafeCodeGen(ctx, ev, in =>
+      Kernels.genIfValid(ev, s"ivfAssignValid($in, $dim)", s"ivfAssign($in, $args)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -127,106 +96,19 @@ case class IvfAssignTopK(
     cellIds: Array[Int],
     dim: Int,
     probes: Int)
-    extends UnaryExpression {
-  require(dim > 0 && centroidsFlat.length % dim == 0 && centroidsFlat.nonEmpty,
-    s"centroidsFlat (${centroidsFlat.length}) must be a nonempty multiple of dim ($dim)")
-  private val k: Int = centroidsFlat.length / dim
-  require(cellIds.isEmpty || cellIds.length == k,
-    s"cellIds (${cellIds.length}) must be empty (identity) or one per centroid ($k)")
+    extends IvfRouting {
   require(probes >= 1, s"probes must be >= 1, got $probes")
-  private val kept: Int = math.min(probes, k)
 
   override def prettyName: String = "ivf_assign_topk"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
 
-  private lazy val floatElems: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case t =>
-      throw new IllegalArgumentException(s"ivf_assign_topk needs array<float|double>, got $t")
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() < dim) return null
-    val topD = Array.fill(kept)(Double.MaxValue)
-    val topC = Array.fill(kept)(-1)
-    var c = 0
-    while (c < k) {
-      val base = c * dim
-      var d = 0.0
-      var i = 0
-      while (i < dim && d < topD(kept - 1)) {
-        val x = if (floatElems) v.getFloat(i).toDouble else v.getDouble(i)
-        val t = centroidsFlat(base + i) - x
-        d += t * t
-        i += 1
-      }
-      if (d < topD(kept - 1)) {
-        var p = kept - 1
-        while (p > 0 && d < topD(p - 1)) {
-          topD(p) = topD(p - 1); topC(p) = topC(p - 1); p -= 1
-        }
-        topD(p) = d; topC(p) = c
-      }
-      c += 1
-    }
-    val out = new Array[Int](kept)
-    var j = 0
-    while (j < kept) {
-      out(j) = if (cellIds.isEmpty) topC(j) else cellIds(topC(j))
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.ivfAssignTopK(input.asInstanceOf[ArrayData], floatElems, centroidsFlat, cellIds,
+      dim, probes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCentroids", centroidsFlat, "double[]")
-    val idsRef =
-      if (cellIds.isEmpty) "" else ctx.addReferenceObj("ivfCellIds", cellIds, "int[]")
-    val getter = if (floatElems) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, in => {
-      val topD = ctx.freshName("topD")
-      val topC = ctx.freshName("topC")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val j = ctx.freshName("j")
-      val base = ctx.freshName("base")
-      val out = ctx.freshName("out")
-      val resolve = if (cellIds.isEmpty) s"$topC[$j]" else s"$idsRef[$topC[$j]]"
-      s"""
-         |if ($in.numElements() < $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $topD = new double[$kept];
-         |  int[] $topC = new int[$kept];
-         |  java.util.Arrays.fill($topD, Double.MAX_VALUE);
-         |  java.util.Arrays.fill($topC, -1);
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $base = $c * $dim;
-         |    double $d = 0.0;
-         |    for (int $i = 0; $i < $dim && $d < $topD[$kept - 1]; $i++) {
-         |      double $t = $cRef[$base + $i] - (double) $in.$getter($i);
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $topD[$kept - 1]) {
-         |      int $p = $kept - 1;
-         |      while ($p > 0 && $d < $topD[$p - 1]) {
-         |        $topD[$p] = $topD[$p - 1]; $topC[$p] = $topC[$p - 1]; $p--;
-         |      }
-         |      $topD[$p] = $d; $topC[$p] = $c;
-         |    }
-         |  }
-         |  int[] $out = new int[$kept];
-         |  for (int $j = 0; $j < $kept; $j++) $out[$j] = $resolve;
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    val args = modelArgs(ctx)
+    nullSafeCodeGen(ctx, ev, in => Kernels.genOrNull(ev, s"ivfAssignTopK($in, $args, $probes)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

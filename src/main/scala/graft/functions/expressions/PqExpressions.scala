@@ -1,21 +1,15 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Native product-quantization kernels. Codebooks ride along as
-  * reference objects (flattened double[] + dims), and the loops match
-  * the HOF forms' accumulation order exactly: per subspace, codeword
-  * distances accumulate dim-ascending; argmin keeps the lowest index
-  * on ties; ADC sums subspace distances ascending — so results are
-  * bit-identical to the `transform`/`aggregate` rendering the DuckDB
-  * oracle mirrors.
-  */
+/** Native product-quantization expressions over [[Kernels.pqEncode]]
+  * and [[Kernels.pqAdc]]. Codebooks ride along as one flattened
+  * reference array: flat(m*k*sd + j*sd + i) = codebooks(m)(j)(i). */
 
-/** Encode a float vector into numSub codeword indexes.
-  * flat(m*k*sd + j*sd + i) = codebooks(m)(j)(i). */
+/** Encode a float vector into numSub codeword indexes. */
 case class PqEncode(child: Expression, flat: Array[Double], numSub: Int, k: Int, subDim: Int)
     extends UnaryExpression {
   override def prettyName: String = "pq_encode"
@@ -24,67 +18,13 @@ case class PqEncode(child: Expression, flat: Array[Double], numSub: Int, k: Int,
   // out-of-bounds memory — the HOF form's null-padding analog
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() < numSub * subDim) return null
-    val out = new Array[Int](numSub)
-    var m = 0
-    while (m < numSub) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < k) {
-        val base = (m * k + j) * subDim
-        var d = 0.0
-        var i = 0
-        while (i < subDim) {
-          val t = flat(base + i) - v.getFloat(m * subDim + i).toDouble
-          d += t * t
-          i += 1
-        }
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
-      }
-      out(m) = best
-      m += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.pqEncode(input.asInstanceOf[ArrayData], flat, numSub, k, subDim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val base = ctx.freshName("base")
-      s"""
-         |if ($in.numElements() < ${numSub * subDim}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |int[] $out = new int[$numSub];
-         |for (int $m = 0; $m < $numSub; $m++) {
-         |  int $best = 0; double $bestD = Double.MAX_VALUE;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    int $base = ($m * $k + $j) * $subDim;
-         |    double $d = 0.0;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $t = $fRef[$base + $i] - (double) $in.getFloat($m * $subDim + $i);
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $best = $j; }
-         |  }
-         |  $out[$m] = $best;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in =>
+      Kernels.genOrNull(ev, s"pqEncode($in, $fRef, $numSub, $k, $subDim)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -95,7 +35,7 @@ case class PqEncode(child: Expression, flat: Array[Double], numSub: Int, k: Int,
   * float query vector column (right). */
 case class PqAdc(left: Expression, right: Expression, flat: Array[Double],
     numSub: Int, k: Int, subDim: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression {
   override def prettyName: String = "pq_adc"
   override def dataType: DataType = DoubleType
   // malformed codes (wrong length / out-of-range, e.g. from a
@@ -106,63 +46,14 @@ case class PqAdc(left: Expression, right: Expression, flat: Array[Double],
   override protected def nullSafeEval(codesAny: Any, qAny: Any): Any = {
     val codes = codesAny.asInstanceOf[ArrayData]
     val q = qAny.asInstanceOf[ArrayData]
-    if (codes.numElements() < numSub || q.numElements() < numSub * subDim) return null
-    var i0 = 0
-    while (i0 < numSub) {
-      val c = codes.getInt(i0)
-      if (c < 0 || c >= k) return null
-      i0 += 1
-    }
-    var acc = 0.0
-    var m = 0
-    while (m < numSub) {
-      val base = (m * k + codes.getInt(m)) * subDim
-      var d = 0.0
-      var i = 0
-      while (i < subDim) {
-        val t = flat(base + i) - q.getFloat(m * subDim + i).toDouble
-        d += t * t
-        i += 1
-      }
-      acc += d
-      m += 1
-    }
-    acc
+    if (Kernels.pqAdcValid(codes, q, numSub, k, subDim)) Kernels.pqAdc(codes, q, flat, numSub, k, subDim)
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, (in, q) => {
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val base = ctx.freshName("base")
-      val acc = ctx.freshName("acc")
-      val ok = ctx.freshName("ok")
-      s"""
-         |boolean $ok = $in.numElements() >= $numSub && $q.numElements() >= ${numSub * subDim};
-         |for (int $m = 0; $ok && $m < $numSub; $m++) {
-         |  int ${m}_c = $in.getInt($m);
-         |  if (${m}_c < 0 || ${m}_c >= $k) $ok = false;
-         |}
-         |if (!$ok) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |double $acc = 0.0;
-         |for (int $m = 0; $m < $numSub; $m++) {
-         |  int $base = ($m * $k + $in.getInt($m)) * $subDim;
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $subDim; $i++) {
-         |    double $t = $fRef[$base + $i] - (double) $q.getFloat($m * $subDim + $i);
-         |    $d += $t * $t;
-         |  }
-         |  $acc += $d;
-         |}
-         |${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (in, q) => Kernels.genIfValid(ev,
+      s"pqAdcValid($in, $q, $numSub, $k, $subDim)", s"pqAdc($in, $q, $fRef, $numSub, $k, $subDim)"))
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

@@ -2,18 +2,14 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Native scalar-quantization kernels (the int8 siblings of the PQ
-  * kernels in [[PqExpressions]]). Per-dimension bounds ride along as
-  * reference arrays, and the loops match the higher-order-function
-  * forms' evaluation order exactly — clamp-then-floor on encode,
-  * `lo + code/255·(hi−lo)` decode and dim-ascending accumulation on
-  * ADC — so results are bit-identical to the `zip_with`/`aggregate`
-  * rendering the DuckDB oracle mirrors for every well-formed
-  * (dimension-matching) input. Malformed input is the one deliberate
-  * deviation: see the per-expression notes.
+/** Native scalar-quantization expressions (the int8 siblings of the PQ
+  * expressions in [[PqExpressions]]) over [[Kernels.sqEncode]] and
+  * [[Kernels.sqAdc]]. Per-dimension bounds ride along as reference
+  * arrays. Malformed input is the one deliberate deviation from the
+  * `zip_with`/`aggregate` forms: see the per-expression notes.
   */
 
 /** Encode a float vector into per-dimension int codes in [0, 255]:
@@ -33,49 +29,13 @@ case class SqEncode(child: Expression, lo: Array[Double], hi: Array[Double])
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != lo.length) return null
-    val out = new Array[Int](lo.length)
-    var i = 0
-    while (i < lo.length) {
-      val den = hi(i) - lo(i)
-      if (den != 0.0) {
-        val r = (v.getFloat(i).toDouble - lo(i)) / den
-        val c = (if (java.lang.Double.isNaN(r)) 1.0 else math.min(math.max(r, 0.0), 1.0)) * 255.0
-        out(i) = math.floor(c).toInt
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.sqEncode(input.asInstanceOf[ArrayData], lo, hi)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val loRef = ctx.addReferenceObj("sqLo", lo, "double[]")
     val hiRef = ctx.addReferenceObj("sqHi", hi, "double[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val den = ctx.freshName("den")
-      val r = ctx.freshName("r")
-      val c = ctx.freshName("c")
-      s"""
-         |if ($in.numElements() != $loRef.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |int[] $out = new int[$loRef.length];
-         |for (int $i = 0; $i < $loRef.length; $i++) {
-         |  double $den = $hiRef[$i] - $loRef[$i];
-         |  if ($den != 0.0) {
-         |    double $r = ((double) $in.getFloat($i) - $loRef[$i]) / $den;
-         |    double $c = (Double.isNaN($r) ? 1.0 : Math.min(Math.max($r, 0.0), 1.0)) * 255.0;
-         |    $out[$i] = (int) Math.floor($c);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in => Kernels.genOrNull(ev, s"sqEncode($in, $loRef, $hiRef)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -100,47 +60,14 @@ case class SqAdc(left: Expression, right: Expression, lo: Array[Double], hi: Arr
   override protected def nullSafeEval(codesAny: Any, qAny: Any): Any = {
     val codes = codesAny.asInstanceOf[ArrayData]
     val q = qAny.asInstanceOf[ArrayData]
-    if (codes.numElements() != lo.length || q.numElements() != lo.length) return null
-    var acc = 0.0
-    var i = 0
-    while (i < lo.length) {
-      val c = codes.getInt(i)
-      if (c < 0 || c > 255) return null
-      val dec = lo(i) + c / 255.0 * (hi(i) - lo(i))
-      val d = dec - q.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
+    if (Kernels.sqAdcValid(codes, q, lo.length)) Kernels.sqAdc(codes, q, lo, hi) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val loRef = ctx.addReferenceObj("sqLo", lo, "double[]")
     val hiRef = ctx.addReferenceObj("sqHi", hi, "double[]")
-    nullSafeCodeGen(ctx, ev, (in, q) => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val dec = ctx.freshName("dec")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      val ok = ctx.freshName("ok")
-      s"""
-         |boolean $ok = $in.numElements() == $loRef.length && $q.numElements() == $loRef.length;
-         |double $acc = 0.0;
-         |for (int $i = 0; $ok && $i < $loRef.length; $i++) {
-         |  int $c = $in.getInt($i);
-         |  if ($c < 0 || $c > 255) { $ok = false; break; }
-         |  double $dec = $loRef[$i] + $c / 255.0 * ($hiRef[$i] - $loRef[$i]);
-         |  double $d = $dec - (double) $q.getFloat($i);
-         |  $acc += $d * $d;
-         |}
-         |if (!$ok) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (in, q) => Kernels.genIfValid(ev,
+      s"sqAdcValid($in, $q, ${lo.length})", s"sqAdc($in, $q, $loRef, $hiRef)"))
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

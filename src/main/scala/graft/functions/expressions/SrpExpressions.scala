@@ -2,7 +2,7 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** All band signatures of a signed-random-projection LSH in ONE fused
@@ -19,68 +19,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * yield null, matching the null a padded zip_with dot would produce. */
 case class SrpSignature(child: Expression, planesFlat: Array[Double], bands: Int, rowBits: Int)
     extends UnaryExpression {
-  private val dim: Int = planesFlat.length / (bands * rowBits)
-
   override def prettyName: String = "srp_signature"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() < dim) return null
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var sig = 0L
-      var j = 0
-      while (j < rowBits) {
-        val base = (b * rowBits + j) * dim
-        var dot = 0.0
-        var i = 0
-        while (i < dim) {
-          dot += v.getFloat(i).toDouble * planesFlat(base + i)
-          i += 1
-        }
-        if (dot > 0.0) sig |= (1L << j)
-        j += 1
-      }
-      out(b) = sig
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.srpSignature(input.asInstanceOf[ArrayData], planesFlat, bands, rowBits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pRef = ctx.addReferenceObj("srpPlanes", planesFlat, "double[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val sig = ctx.freshName("sig")
-      val base = ctx.freshName("base")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($in.numElements() < $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $sig = 0L;
-         |  for (int $j = 0; $j < $rowBits; $j++) {
-         |    int $base = ($b * $rowBits + $j) * $dim;
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      $dot += (double) $in.getFloat($i) * $pRef[$base + $i];
-         |    }
-         |    if ($dot > 0.0) $sig |= (1L << $j);
-         |  }
-         |  $out[$b] = $sig;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in =>
+      Kernels.genOrNull(ev, s"srpSignature($in, $pRef, $bands, $rowBits)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -2,15 +2,15 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen expressions for the dedup hash pipeline — each fuses
-  * what the higher-order-function forms do in K passes with per-element
-  * allocation into one tight loop. Semantics are byte-for-byte the
-  * DuckDB oracle's on ASCII text (the fixtures are ASCII; ord(char) ==
-  * byte value).
+/** Native expressions for the dedup hash pipeline — each fuses what the
+  * higher-order-function forms do in K passes with per-element
+  * allocation into one tight loop in [[Kernels]]. Semantics are
+  * byte-for-byte the DuckDB oracle's on ASCII text (the fixtures are
+  * ASCII; ord(char) == byte value).
   */
 
 /** Polynomial rolling hash over the string's bytes:
@@ -20,31 +20,11 @@ case class PolyHash(child: Expression, mod: Long) extends UnaryExpression {
   override def prettyName: String = "poly_hash"
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      h = (h * 31L + (bytes(i) & 0xffL)) % mod
-      i += 1
-    }
-    h
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.polyHash(input.asInstanceOf[UTF8String], mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val bts = ctx.freshName("bts")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |byte[] $bts = $a.getBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $bts.length; $i++) {
-         |  $h = ($h * 31L + ($bts[$i] & 0xffL)) % ${mod}L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${Kernels.Name}.polyHash($a, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -63,76 +43,11 @@ case class CdcCuts(child: Expression, w: Int, modulus: Int) extends UnaryExpress
   override def prettyName: String = "cdc_cuts"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val buf = new Array[Long](w)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var pos = 0 // 1-based char position counter
-    var ci = 0 // UTF-16 index
-    while (ci < s.length) {
-      val cp = s.codePointAt(ci)
-      ci += Character.charCount(cp)
-      pos += 1
-      buf((pos - 1) % w) = cp.toLong
-      if (pos >= w) {
-        // window hash oldest->newest: start at index pos % w
-        var h = 0L
-        var j = 0
-        while (j < w) {
-          h = (h * 31L + buf((pos + j) % w)) % 1000000007L
-          j += 1
-        }
-        if (h % modulus == 0L) out += pos.toLong
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.cdcCuts(input.asInstanceOf[UTF8String], w, modulus)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val s = ctx.freshName("s")
-      val buf = ctx.freshName("buf")
-      val out = ctx.freshName("out")
-      val nOut = ctx.freshName("nOut")
-      val grown = ctx.freshName("grown")
-      val pos = ctx.freshName("pos")
-      val ci = ctx.freshName("ci")
-      val cp = ctx.freshName("cp")
-      val h = ctx.freshName("h")
-      val j = ctx.freshName("j")
-      // Janino can't compile generic collections — grow a primitive
-      // long[] by hand instead of ArrayList<Long>
-      s"""
-         |String $s = $a.toString();
-         |long[] $buf = new long[$w];
-         |long[] $out = new long[8];
-         |int $nOut = 0;
-         |int $pos = 0;
-         |int $ci = 0;
-         |while ($ci < $s.length()) {
-         |  int $cp = $s.codePointAt($ci);
-         |  $ci += Character.charCount($cp);
-         |  $pos += 1;
-         |  $buf[($pos - 1) % $w] = (long) $cp;
-         |  if ($pos >= $w) {
-         |    long $h = 0L;
-         |    for (int $j = 0; $j < $w; $j++) {
-         |      $h = ($h * 31L + $buf[($pos + $j) % $w]) % 1000000007L;
-         |    }
-         |    if ($h % $modulus == 0L) {
-         |      if ($nOut == $out.length) {
-         |        long[] $grown = new long[$out.length * 2];
-         |        System.arraycopy($out, 0, $grown, 0, $nOut);
-         |        $out = $grown;
-         |      }
-         |      $out[$nOut++] = (long) $pos;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($out, $nOut));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${Kernels.Name}.cdcCuts($a, $w, $modulus)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -147,49 +62,13 @@ case class MinHashSignature(child: Expression, as: Array[Long], bs: Array[Long],
   override def prettyName: String = "minhash_signature"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val k = as.length
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    val n = hs.numElements()
-    while (i < n) {
-      val h = hs.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = (as(j) * h + bs(j)) % prime
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.minHashSignature(input.asInstanceOf[ArrayData], as, bs, prime)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val n = ctx.freshName("n")
-      s"""
-         |long[] $mins = new long[$aRef.length];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |int $n = $in.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $in.getLong($i);
-         |  for (int $j = 0; $j < $aRef.length; $j++) {
-         |    long $v = ($aRef[$j] * $h + $bRef[$j]) % ${prime}L;
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, in => s"${Kernels.Name}.minHashSignature($in, $aRef, $bRef, ${prime}L)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -207,73 +86,14 @@ case class MinHashSignature(child: Expression, as: Array[Long], bs: Array[Long],
   * positive and < 2^62, so the DuckDB oracle can mirror the arithmetic
   * with checked BIGINT math and no sign-bit edge case at bit 63. */
 case class SimHash64(child: Expression) extends UnaryExpression {
-  val LoMult = 2654435761L
-  val HiMult = 2246822519L
-  val HiAdd = 12345L
-  val Mod32 = 4294967296L
-
   override def prettyName: String = "simhash64"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val votes = new Array[Int](64)
-    var i = 0
-    val n = hs.numElements()
-    while (i < n) {
-      val h = hs.getLong(i)
-      val lo = (h * LoMult) % Mod32
-      val hi = (h * HiMult + HiAdd) % Mod32
-      var b = 0
-      while (b < 32) {
-        votes(b) += (if (((lo >> b) & 1L) == 1L) 1 else -1)
-        votes(b + 32) += (if (((hi >> b) & 1L) == 1L) 1 else -1)
-        b += 1
-      }
-      i += 1
-    }
-    var loW = 0L
-    var hiW = 0L
-    var b = 0
-    while (b < 32) {
-      if (votes(b) > 0) loW |= (1L << b)
-      if (votes(b + 32) > 0) hiW |= (1L << b)
-      b += 1
-    }
-    new GenericArrayData(Array(hiW, loW))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.simHash64(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val n = ctx.freshName("n")
-      val loW = ctx.freshName("loW")
-      val hiW = ctx.freshName("hiW")
-      s"""
-         |int[] $votes = new int[64];
-         |int $n = $in.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $in.getLong($i);
-         |  long $lo = ($h * ${LoMult}L) % ${Mod32}L;
-         |  long $hi = ($h * ${HiMult}L + ${HiAdd}L) % ${Mod32}L;
-         |  for (int $b = 0; $b < 32; $b++) {
-         |    $votes[$b] += ((($lo >> $b) & 1L) == 1L) ? 1 : -1;
-         |    $votes[$b + 32] += ((($hi >> $b) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $loW = 0L; long $hiW = 0L;
-         |for (int $b = 0; $b < 32; $b++) {
-         |  if ($votes[$b] > 0) $loW |= (1L << $b);
-         |  if ($votes[$b + 32] > 0) $hiW |= (1L << $b);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[]{$hiW, $loW});
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, in => s"${Kernels.Name}.simHash64($in)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

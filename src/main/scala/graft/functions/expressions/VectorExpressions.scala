@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Native Catalyst expressions for the vector kernels: a fused
-  * single-pass loop with whole-stage codegen, replacing the
+/** Native Catalyst expressions for the vector kernels: one fused
+  * single-pass loop ([[Kernels]]), replacing the
   * `aggregate(zip_with(...))` higher-order-function forms on hot paths
   * (HOFs allocate an intermediate array per row and box the lambda
   * variables; these loops touch the two float arrays once).
@@ -26,35 +26,11 @@ abstract class VectorBinaryExpression extends BinaryExpression {
 case class L2SquaredDistance(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "l2sq_native"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ${ev.value}_acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  ${ev.value}_acc += $d * $d;
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${Kernels.Name}.l2sq($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -64,32 +40,11 @@ case class L2SquaredDistance(left: Expression, right: Expression) extends Vector
 case class DotProductNative(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "dot_native"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ${ev.value}_acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}_acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${Kernels.Name}.dot($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -101,49 +56,11 @@ case class DotProductNative(left: Expression, right: Expression) extends VectorB
 case class CosineSimilarityNative(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "cosine_native"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv
-      na += xv * xv
-      nb += yv * yv
-      i += 1
-    }
-    val den = math.sqrt(na) * math.sqrt(nb)
-    if (math.sqrt(na) == 0.0 || math.sqrt(nb) == 0.0) 0.0 else dot / den
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |double ${ev.value}_sna = java.lang.Math.sqrt($na);
-         |double ${ev.value}_snb = java.lang.Math.sqrt($nb);
-         |${ev.value} = (${ev.value}_sna == 0.0 || ${ev.value}_snb == 0.0)
-         |  ? 0.0 : $dot / (${ev.value}_sna * ${ev.value}_snb);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${Kernels.Name}.cosine($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -24,6 +24,10 @@ object ProductQuantizer {
   final case class Model(codebooks: Array[Array[Array[Double]]]) {
     def numSub: Int = codebooks.length
     def subDim: Int = codebooks(0)(0).length
+    def k: Int = codebooks(0).length
+    /** flat(m*k*subDim + j*subDim + i) = codebooks(m)(j)(i): the layout
+      * [[graft.functions.expressions.Kernels.pqAdc]] reads. */
+    lazy val flat: Array[Double] = codebooks.flatten.flatten
   }
 
   private def l2(a: Array[Double], b: Array[Double]): Double = {
@@ -87,9 +91,6 @@ object ProductQuantizer {
     Model(books.toArray)
   }
 
-  private def flat(model: Model): Array[Double] =
-    model.codebooks.flatten.flatten
-
   /** Encode: per subspace, index of the nearest codeword (ties to the
     * lowest index). Returns array<int> of length numSub. Native fused
     * loop (codebooks ship as one flat reference array); accumulation
@@ -98,8 +99,7 @@ object ProductQuantizer {
   def encodeExpr(vec: Column, model: Model): Column = {
     import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
     toCol(graft.functions.expressions.PqEncode(
-      toExpr(vec.cast("array<float>")), flat(model),
-      model.numSub, model.codebooks(0).length, model.subDim))
+      toExpr(vec.cast("array<float>")), model.flat, model.numSub, model.k, model.subDim))
   }
 
   /** Asymmetric distance: sum over subspaces of
@@ -107,7 +107,7 @@ object ProductQuantizer {
   def adcExpr(codes: Column, queryVec: Column, model: Model): Column = {
     import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
     toCol(graft.functions.expressions.PqAdc(
-      toExpr(codes), toExpr(queryVec.cast("array<float>")), flat(model),
-      model.numSub, model.codebooks(0).length, model.subDim))
+      toExpr(codes), toExpr(queryVec.cast("array<float>")), model.flat,
+      model.numSub, model.k, model.subDim))
   }
 }

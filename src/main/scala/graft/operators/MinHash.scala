@@ -140,18 +140,24 @@ object MinHash {
     // sides of the verify join all branch from it (without this, the
     // shingling subtree executes up to 4x)
     val base = shingled(docs, n, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = base.select(col("id"), col("sh"), col("n_sh"), signature(col("hs")).as("sig"))
-    val cand = bandedCandidates(sig)
+    try {
+      val sig = base.select(col("id"), col("sh"), col("n_sh"), signature(col("hs")).as("sig"))
+      val cand = bandedCandidates(sig)
 
-    val sets = base.select(col("id"), col("sh"), col("n_sh"))
-    cand
-      .join(sets.select(col("id").as("a"), col("sh").as("sha"), col("n_sh").as("na")), "a")
-      .join(sets.select(col("id").as("b"), col("sh").as("shb"), col("n_sh").as("nb")), "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jac", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"))
-      .filter(col("jac") >= tau)
-      .select(col("a"), col("b"), col("jac"))
+      val sets = base.select(col("id"), col("sh"), col("n_sh"))
+      cand
+        .join(sets.select(col("id").as("a"), col("sh").as("sha"), col("n_sh").as("na")), "a")
+        .join(sets.select(col("id").as("b"), col("sh").as("shb"), col("n_sh").as("nb")), "b")
+        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+        .withColumn("jac", col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")).cast("double"))
+        .filter(col("jac") >= tau)
+        .select(col("a"), col("b"), col("jac"))
+        // materialize before releasing the shingle cache, as in
+        // estimatePairs: a session that dedups many shards must not
+        // keep every shard's table
+        .localCheckpoint()
+    } finally base.unpersist(blocking = false)
   }
 
   /** Banded candidates with the signature-agreement Jaccard ESTIMATE

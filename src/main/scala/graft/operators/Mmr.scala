@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.Kernels
 import graft.index.Hnsw
 
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
@@ -57,27 +59,16 @@ object Mmr {
   val l2Sim: (Array[Float], Array[Float]) => Double =
     (a, b) => -Hnsw.l2Sq(a, b)
 
-  /** Cosine redundancy sim (zero-norm guard mirrors the serving
-    * kernel's, `/root/reference/src/lib.rs:32-47`). */
-  val cosineSim: (Array[Float], Array[Float]) => Double = (a, b) => {
-    var dp = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      dp += a(i).toDouble * b(i).toDouble
-      na += a(i).toDouble * a(i).toDouble
-      nb += b(i).toDouble * b(i).toDouble
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dp / (math.sqrt(na) * math.sqrt(nb))
-  }
+  private def arr(a: Array[Float]) = UnsafeArrayData.fromPrimitiveArray(a)
+
+  /** Cosine redundancy sim: the serving kernel, zero-norm guard
+    * included (ref `src/lib.rs:32-47`). */
+  val cosineSim: (Array[Float], Array[Float]) => Double =
+    (a, b) => Kernels.cosine(arr(a), arr(b))
 
   /** Inner-product redundancy sim (MIPS handles). */
-  val dotSim: (Array[Float], Array[Float]) => Double = (a, b) => {
-    var dp = 0.0
-    var i = 0
-    while (i < a.length) { dp += a(i).toDouble * b(i).toDouble; i += 1 }
-    dp
-  }
+  val dotSim: (Array[Float], Array[Float]) => Double =
+    (a, b) => Kernels.dot(arr(a), arr(b))
 
   /** The pure greedy pass: (rank, id, relevance-dist) in pick order.
     * The float math mirrors the oracle's expression tree exactly:

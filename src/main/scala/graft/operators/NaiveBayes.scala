@@ -128,14 +128,27 @@ object NaiveBayes {
       // semantics, and the two differ when a supplementary-plane name
       // ties against one in [U+E000, U+FFFF] (ADVICE r17)
       .sortBy(_._1)(codePointOrdering).toSeq
+    // weighted: `toks` carries a per-(doc, tok) multiplicity `c`
+    // (one tokenize pass upstream) — c × lp is exactly the sum of c
+    // identical DECIMAL(18,6) addends, so scores are bit-identical
+    // to the per-occurrence shape
+    def addend(lp: Column): Column = if (weighted) lp * col("c") else lp
+    def score(lprior: Column, summed: Column): Column =
+      lprior.cast("decimal(18,6)") + coalesce(summed, lit(0).cast("decimal(28,6)"))
     // empty training corpus → empty scored frame with the full output
     // schema (the pre-r17 window shape's behavior on degenerate input;
     // ADVICE r17 — a throw here broke confusion()/classify() on empty
-    // corpora). decimal(29,6) is the nonempty path's score type.
-    if (cands.isEmpty)
+    // corpora). The score type is read off the nonempty path's own
+    // expressions: decimal(29,6) unweighted, wider when `c` scales
+    // the addends.
+    if (cands.isEmpty) {
+      val scoreType = toks.limit(0)
+        .agg(sum(addend(lit(0).cast("decimal(18,6)"))).as("s"))
+        .select(score(lit(0), col("s"))).schema.head.dataType
       return spine.limit(0).select(spine.columns.map(col).toSeq ++ Seq(
         lit(null).cast("string").as("predicted"),
-        lit(null).cast("decimal(29,6)").as("score")): _*)
+        lit(null).cast(scoreType).as("score")): _*)
+    }
     val names = cands.map(_._1)
     def cn(i: Int) = s"__c$i"
     def sn(i: Int) = s"__s$i"
@@ -150,19 +163,14 @@ object NaiveBayes {
     val sumAggs = cands.zipWithIndex.map { case ((_, den, _), i) =>
       val lp = log((coalesce(col(cn(i)), lit(0L)).cast("double") + lit(1.0)) /
         lit(den)).cast("decimal(18,6)")
-      // weighted: `toks` carries a per-(doc, tok) multiplicity `c`
-      // (one tokenize pass upstream) — c × lp is exactly the sum of c
-      // identical DECIMAL(18,6) addends, so scores are bit-identical
-      // to the per-occurrence shape
-      sum(if (weighted) lp * col("c") else lp).as(sn(i))
+      sum(addend(lp)).as(sn(i))
     }
     val sums = toks
       .join(broadcast(piv), Seq("tok"), "left")
       .groupBy(col("doc_id"))
       .agg(sumAggs.head, sumAggs.tail: _*)
     val scoreCols = cands.zipWithIndex.map { case ((_, _, lprior), i) =>
-      (lit(lprior).cast("decimal(18,6)") +
-        coalesce(col(sn(i)), lit(0).cast("decimal(28,6)"))).as(s"__sc$i")
+      score(lit(lprior), col(sn(i))).as(s"__sc$i")
     }
     val wide = spine
       .join(sums, Seq("doc_id"), "left")

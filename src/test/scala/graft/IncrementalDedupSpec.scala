@@ -61,6 +61,23 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"arms disagree: missing=${full -- inc} extra=${inc -- full}")
   }
 
+  test("lshDedup releases its shingle cache; its pairs are estimatePairs' census cut at tau") {
+    import spark.implicits._
+    val docs = Seq((1L, a), (2L, a + " extra"), (3L, a + " extra words"), (4L, a),
+      (5L, "completely unrelated words about nothing shared with anything else ever"))
+      .toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    val pairs = MinHash.lshDedup(docs, tau = 0.7)
+    assert(spark.sharedState.cacheManager.isEmpty, "lshDedup left its shingle table cached")
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val census = MinHash.estimatePairs(docs).filter(col("jac") >= 0.7)
+      .select("a", "b", "jac")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got.nonEmpty && got == census,
+      s"pairs changed: missing=${census -- got} extra=${got -- census}")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   // ---- MinHash estimator calibration ----
 
   test("estimatePairs: identical docs estimate 1.0; the K=16 estimate tracks exact Jaccard") {

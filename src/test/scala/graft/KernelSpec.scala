@@ -120,6 +120,124 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(overlap >= 5, s"trained PQ top-10 overlap with exact: $overlap/10")
   }
 
+  /** Run `body` with every projection compiled (whole-stage codegen,
+    * no interpreted fallback) or with every projection interpreted. */
+  private def inMode[T](codegen: Boolean)(body: => T): T = {
+    val confs =
+      if (codegen) Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+      else Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("every native expression: generated code == interpreted eval, malformed rows included") {
+    import graft.functions.expressions._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+    val (dim, numSub, k, bands, rowBits) = (64, 4, 16, 4, 8)
+    val rnd = new scala.util.Random(7)
+    def gauss(n: Int) = Array.fill(n)(rnd.nextGaussian())
+    val centroids = gauss(8 * dim)
+    val cellIds = Array.tabulate(8)(c => 10 + 3 * c)
+    val pqFlat = gauss(numSub * k * (dim / numSub))
+    val lo = Array.fill(dim)(-0.5)
+    val hi = Array.tabulate(dim)(i => if (i == 5) -0.5 else 0.5) // dim 5 degenerate
+    val planes = gauss(bands * rowBits * dim)
+    val as = Array.tabulate(16)(j => 1000L + 7 * j)
+    val bs = Array.tabulate(16)(j => 12345L + 101 * j)
+    // the fixture plus malformed rows: every 7th vector cut short, every
+    // 5th code array holding an out-of-range code, every 11th input
+    // NULL. Checkpointed, so the kernels' own projection is a plain
+    // scan + project stage (the higher-order functions that build the
+    // codes would keep it out of whole-stage codegen)
+    val id = col("vec_id")
+    def codes(n: Int, range: Int): Column = {
+      val c = transform(slice(col("embedding"), 1, n), x => (abs(x) * 1000).cast("int") % range)
+      when(id % 5 === 0, transform(c, x => x + range)).otherwise(c)
+    }
+    val vectors = spark.read.parquet(s"$sfDir/embeddings.parquet").select(id.as("key"),
+      when(id % 11 === 0, lit(null)).when(id % 7 === 0, slice(col("embedding"), 1, 3))
+        .otherwise(col("embedding")).as("v"),
+      reverse(col("embedding")).as("q"),
+      codes(numSub, k).as("pq_codes"), codes(dim, 256).as("sq_codes")).localCheckpoint()
+    val text = when(col("doc_id") % 11 === 0, lit(null)).otherwise(col("text"))
+    val texts = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id").as("key"),
+      text.as("text"),
+      transform(split(text, " "), w => pmod(xxhash64(w), lit(2147483647L))).as("hs"))
+      .localCheckpoint()
+    val Seq(ve, qe, te, he, pqCodes, sqCodes) =
+      Seq("v", "q", "text", "hs", "pq_codes", "sq_codes").map(c => toExpr(col(c)))
+    // (column, Kernels method, expression)
+    val vectorCases: Seq[(String, String, Expression)] = Seq(
+      ("l2", "l2sq", L2SquaredDistance(ve, qe)),
+      ("dp", "dot", DotProductNative(ve, qe)),
+      ("cos", "cosine", CosineSimilarityNative(ve, qe)),
+      ("cell", "ivfAssign", IvfAssign(ve, centroids, cellIds, dim)),
+      ("cell_d", "ivfAssign",
+        IvfAssign(toExpr(col("v").cast("array<double>")), centroids, Array.empty[Int], dim)),
+      ("cells", "ivfAssignTopK", IvfAssignTopK(ve, centroids, cellIds, dim, 3)),
+      ("pq", "pqEncode", PqEncode(ve, pqFlat, numSub, k, dim / numSub)),
+      ("pq_adc", "pqAdc", PqAdc(pqCodes, ve, pqFlat, numSub, k, dim / numSub)),
+      ("sq", "sqEncode", SqEncode(ve, lo, hi)),
+      ("sq_adc", "sqAdc", SqAdc(sqCodes, ve, lo, hi)),
+      ("bits", "signPack", SignPack(ve, dim)),
+      ("ham", "hamming", HammingWords(SignPack(ve, dim), SignPack(qe, dim))),
+      ("srp", "srpSignature", SrpSignature(ve, planes, bands, rowBits)))
+    val textCases: Seq[(String, String, Expression)] = Seq(
+      ("ph", "polyHash", PolyHash(te, 1000000007L)),
+      ("cuts", "cdcCuts", CdcCuts(te, 8, 16)),
+      ("mh", "minHashSignature", MinHashSignature(he, as, bs, 2147483647L)),
+      ("sh", "simHash64", SimHash64(he)))
+    assert((vectorCases ++ textCases).map(_._2).distinct.size == 16)
+
+    // per frame, rows by key (key dropped); no shuffle, so one stage
+    def run(codegen: Boolean): Seq[Seq[Seq[Any]]] = inMode(codegen) {
+      Seq(vectors -> vectorCases, texts -> textCases).map { case (base, cases) =>
+        val df = base.select(col("key") +: cases.map { case (c, _, e) => toCol(e).as(c) }: _*)
+        val rows = df.collect().sortBy(_.getLong(0)).map(_.toSeq.tail).toSeq
+        if (codegen) {
+          // the compiled stage calls each kernel: no silent eval fallback
+          val code = org.apache.spark.sql.execution.debug
+            .codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString
+          cases.foreach { case (c, kernel, _) =>
+            assert(code.contains(s"${Kernels.Name}.$kernel("), s"$c: no compiled call to $kernel")
+          }
+        }
+        rows
+      }
+    }
+    val (compiled, interpreted) = (run(codegen = true), run(codegen = false))
+    Seq(vectorCases, textCases).zipWithIndex.foreach { case (cases, f) =>
+      cases.zipWithIndex.foreach { case ((c, _, _), j) =>
+        assert(compiled(f).map(_(j)) == interpreted(f).map(_(j)),
+          s"$c: generated code != interpreted eval")
+      }
+    }
+    // malformed rows reach the NULL paths: more NULLs than NULL inputs
+    val vectorRows = compiled.head
+    def nulls(c: String) = vectorRows.count(_(vectorCases.indexWhere(_._1 == c)) == null)
+    assert(nulls("l2") > 0)
+    Seq("cell", "cell_d", "cells", "pq", "pq_adc", "sq", "sq_adc", "srp").foreach { c =>
+      assert(nulls(c) > nulls("l2"), s"$c: malformed rows must give NULL")
+    }
+
+    // a Hamming width mismatch raises the same error on both paths
+    def widthError(codegen: Boolean): String = inMode(codegen) {
+      val e = intercept[Exception] {
+        vectors.select(toCol(HammingWords(SignPack(qe, dim), SignPack(qe, dim + 32)))).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+        .getOrElse(fail(s"no width error in $e"))
+    }
+    assert(widthError(codegen = true) == widthError(codegen = false))
+    assert(widthError(codegen = true).contains("packed at different widths (2 vs 3 words)"))
+    Seq(vectors, texts).foreach(_.unpersist())
+  }
+
   test("TopKAggregator: reduce keeps k smallest with id tiebreak, merge preserves order") {
     val agg = new TopKAggregator(3)
     val buf = Seq((5.0, 1L), (1.0, 9L), (3.0, 2L), (1.0, 3L), (7.0, 0L))

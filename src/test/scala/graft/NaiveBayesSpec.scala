@@ -50,6 +50,21 @@ class NaiveBayesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(run(rows) == Map(("a", "b") -> 1L, ("b", "b") -> 3L))
   }
 
+  test("scoreWide: an empty corpus keeps the nonempty score type, weighted or not") {
+    import spark.implicits._
+    val cand = Seq(("a", 10.0, BigDecimal("-0.693147"))).toDF("cand", "den", "lprior")
+      .select(col("cand"), col("den"), col("lprior").cast("decimal(18,6)"))
+    val model = Seq(("a", "x", 3L)).toDF("g", "tok", "c")
+    val spine = Seq((1L, "a")).toDF("doc_id", "g")
+    val toks = Seq((1L, "x", 2L)).toDF("doc_id", "tok", "c")
+    Seq(false, true).foreach { weighted =>
+      // names and types; the empty path's NULL literals are nullable
+      def fields(c: org.apache.spark.sql.DataFrame) =
+        NaiveBayes.scoreWide(c, model, spine, toks, weighted).schema.map(f => (f.name, f.dataType))
+      assert(fields(cand.limit(0)) == fields(cand), s"weighted = $weighted")
+    }
+  }
+
   test("result is partition-invariant (decimal-exact scoring)") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)

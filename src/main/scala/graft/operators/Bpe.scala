@@ -79,29 +79,21 @@ object Bpe {
     * overlapping repeats — Sennrich's `get_stats`). */
   def learnMerges(vocab0: DataFrame, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val spark = vocab0.sparkSession
-    var vocab = vocab0.localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var step = 1
-    var done = false
-    while (step <= nMerges && !done) {
-      val tt = vocab.select(toks(col("w")).as("t"), col("cnt"))
-      val pairs = tt
+    Rounds.run(vocab0, nMerges) { r =>
+      val pairs = r.frame.select(toks(col("w")).as("t"), col("cnt"))
         .filter(size(col("t")) >= 2)
         .select(explode(transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("a"),
             element_at(col("t"), i + 1).as("b")))).as("p"), col("cnt"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("cnt")).as("s"))
-      val best = pairs.orderBy(col("s").desc, col("a"), col("b")).limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (a, b, s) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += Merge(step, a, b, s)
-        vocab = vocab.select(rewrite(col("w"), a, b).as("w"), col("cnt"))
-          .localCheckpoint()
-        step += 1
-      }
+      pairs.orderBy(col("s").desc, col("a"), col("b")).limit(1).collect()
+        .headOption.map { best =>
+          val (a, b) = (best.getString(0), best.getString(1))
+          merges += Merge(r.index + 1, a, b, best.getLong(2))
+          r.frame.select(rewrite(col("w"), a, b).as("w"), col("cnt"))
+        }
     }
     merges.toSeq
   }

@@ -30,57 +30,51 @@ object Dedup {
     * scale swap in the large-star/small-star variant. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel
+    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val edges = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
       .union(pairs.select(col("b").cast("long").as("u"), col("a").cast("long").as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var changed = 1L
-    var it = 0
-    // the previous round's checkpoint frame, releasable once the next
-    // round has materialized (labels itself is a projection OVER it,
-    // so releasing must target the checkpointed frame, not labels)
-    var lastCk: DataFrame = null
-    while (changed > 0 && it < maxIters) {
-      val nbrMin = edges.join(labels, edges("v") === labels("id"))
-        .groupBy(edges("u").as("nid")).agg(min(col("comp")).as("nbr_comp"))
-      // the convergence census rides the SAME action that checkpoints
-      // the round's labels as an observed metric (the pageRank
-      // dangling-mass convention), so each round launches ONE job —
-      // the previous shape paid a second full scan + job floor per
-      // round just to count the changed rows
-      val obs = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(col("id"), col("comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp_next"))
-        .observe(s"cc_round_$it",
-          coalesce(sum(when(col("comp_next") < col("comp"), 1L)
-            .otherwise(0L)), lit(0L)).as("chg"))
-      // eager localCheckpoint truncates the lineage each round —
-      // without it the plan nests one full join tree per iteration
-      val updated = obs.localCheckpoint()
-      changed = obs.queryExecution.observedMetrics(s"cc_round_$it")
-        .getAs[Long]("chg")
-      // the superseded round's checkpoint blocks are dead once the new
-      // round materialized
-      if (lastCk != null)
-        org.apache.spark.sql.graft.CheckpointBridge.release(lastCk)
-      lastCk = updated
-      labels = updated.select(col("id"), col("comp_next").as("comp"))
-      it += 1
-    }
-    // fail loudly rather than return partially-propagated (wrong) labels
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(component diameter exceeds maxIters) — raise maxIters")
-    // edges and the seed labels stay persisted on return (CacheManager
-    // entries, bounded at one per distinct plan): a later execution of
-    // the same query plan-matches and reuses them — unpersisting here
-    // was A/B'd at +3 s on timed q_pipeline_corpus (forced cold
-    // recompute of the quality cascade the pair graph hangs under)
-    labels
+    try {
+      // (id, comp) -> (id, comp, was): one min-label round; the census
+      // counts the labels it lowered
+      def propagate(labels: DataFrame): DataFrame = {
+        val nbrMin = edges.join(labels, edges("v") === labels("id"))
+          .groupBy(edges("u").as("nid")).agg(min(col("comp")).as("nbr_comp"))
+        labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
+            col("comp").as("was"))
+      }
+      val changed = coalesce(sum(when(col("comp") < col("was"), 1L)
+        .otherwise(0L)), lit(0L)).as("chg")
+      // round 1 in closed form is Rounds' round 0: while every label is
+      // still its own id, a node's neighbour minimum is its smallest
+      // neighbour id
+      val first = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("m"))
+        .select(col("id"), least(col("id"), col("m")).as("comp"), col("id").as("was"))
+      val last = Rounds.run(first, maxIters - 1, changed) { r =>
+        if (r.census.getAs[Long]("chg") == 0) None
+        else Some(propagate(r.frame.select(col("id"), col("comp"))))
+      }
+      // fail loudly rather than return partially-propagated (wrong) labels
+      if (last.census.getAs[Long]("chg") > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds " +
+            "(component diameter exceeds maxIters) — raise maxIters")
+      last.frame.select(col("id"), col("comp"))
+    } finally releaseEdges(pairs, edges)
   }
+
+  /** Drop a CC variant's persisted edge list on return when its input
+    * reads a checkpoint. A per-execution checkpoint is a fresh
+    * LogicalRDD on every run, so no later execution can plan-match the
+    * entry and it would only leak. Over stable sources the entry stays,
+    * and a later execution of the same query reuses it — unpersisting
+    * there was A/B'd at +3 s on timed q_pipeline_corpus (forced cold
+    * recompute of the quality cascade the pair graph hangs under). */
+  private def releaseEdges(pairs: DataFrame, edges: DataFrame): Unit =
+    if (org.apache.spark.sql.graft.CheckpointBridge.readsCheckpoint(pairs))
+      edges.unpersist(blocking = false)
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
@@ -128,41 +122,36 @@ object Dedup {
         .distinct()
     }
 
-    var edges = pairs
+    // fixpoint iff the edges form a star forest: no node is both a
+    // child (u side) and a parent (v side). One semi-join count over
+    // the pair graph — cheaper than the two set-equality excepts
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(col("v")).distinct()
+        .join(e.select(col("u").as("v")).distinct(), "v")
+        .count() == 0
+
+    // the persisted seed is Rounds' round 0, read as it is
+    val seed = pairs
       .select(greatest(col("a"), col("b")).cast("long").as("u"),
         least(col("a"), col("b")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var it = 0
-    var stable = false
-    val seedEdges = edges
-    while (!stable && it < maxIters) {
-      // localCheckpoint truncates per-round lineage (same reasoning as
-      // the propagation variant)
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      // fixpoint iff the edges form a star forest: no node is both a
-      // child (u side) and a parent (v side). One semi-join count over
-      // the pair graph — cheaper than the two set-equality excepts
-      stable = next.select(col("v")).distinct()
-        .join(next.select(col("u").as("v")).distinct(), "v")
-        .count() == 0
-      // the superseded round's checkpoint blocks are dead once `next`
-      // materialized (the seed frame is a persisted CacheManager entry,
-      // deliberately left for cross-execution plan-match reuse)
-      if (!(edges eq seedEdges))
-        org.apache.spark.sql.graft.CheckpointBridge.release(edges)
-      edges = next
-      it += 1
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIters rounds")
-    // at fixpoint every non-root points straight at its component min;
-    // roots (component minima) label themselves
-    edges.select(col("u").as("id"), col("v").as("comp"))
-      .union(edges.select(col("v").as("id"), col("v").as("comp")))
-      .distinct()
+    try {
+      val last = Rounds.run(seed, maxIters) { r =>
+        if (r.index > 0 && isStarForest(r.frame)) None
+        else Some(smallStar(largeStar(r.frame)))
+      }
+      if (last.index == 0 || !last.settled && !isStarForest(last.frame))
+        throw new IllegalStateException(
+          s"connectedComponentsStar did not converge in $maxIters rounds")
+      // at fixpoint every non-root points straight at its component min;
+      // roots (component minima) label themselves
+      val e = last.frame
+      e.select(col("u").as("id"), col("v").as("comp"))
+        .union(e.select(col("v").as("id"), col("v").as("comp")))
+        .distinct()
+    } finally releaseEdges(pairs, seed)
   }
 
   /** Triangle census of an undirected pair graph — the clustering-

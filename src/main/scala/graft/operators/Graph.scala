@@ -47,10 +47,8 @@ object Graph {
     * round, never the O(E) side (at web scale E ≫ N, so this is the
     * difference between shuffling the graph iters times and once).
     * Degrees and the node set build once; N is a scalar; nothing
-    * collects. `localCheckpoint` per round keeps the plan flat (the
-    * [[Dedup.connectedComponents]] lesson) — at a fixed iteration
-    * count the wall-clock is iters × (join + agg), however large the
-    * graph. */
+    * collects. At a fixed iteration count the wall-clock is
+    * iters × (join + agg), however large the graph. */
   /** PERSONALIZED PageRank (Page et al. '99 §6 "personalized" E
     * vector; the related-items / topic-sensitive serving variant):
     * identical recurrence, but the teleport mass lands on a SEED set
@@ -89,8 +87,7 @@ object Graph {
     * (shuffle O(N)) and ONE semi-join of the edge list against the
     * surviving nodes on each endpoint (equi-joins; the edge list only
     * ever shrinks). All-integer arithmetic — degree thresholds replay
-    * exactly in SQL as unrolled round CTEs. `localCheckpoint` per
-    * round keeps the plan flat (the [[pageRank]] lesson). */
+    * exactly in SQL as unrolled round CTEs. */
   def kCorePeel(pairs: DataFrame, k: Int, rounds: Int,
       aCol: String = "a", bCol: String = "b"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -103,53 +100,29 @@ object Graph {
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("v"))
       .filter(col("u") =!= col("v")) // self-loops never contribute core degree
       .distinct()
-    // the round's edge census rides the SAME action that checkpoints
-    // the round's edges as an observed metric (the pageRank dangling-
-    // mass / CC convention), so each round launches ONE job — the
-    // previous shape paid a second scan-the-checkpoint job per round
-    // just to count rows
-    def observedCount(d: org.apache.spark.sql.Dataset[_], name: String): Long =
-      d.queryExecution.observedMetrics(name).getAs[Long]("n")
-    val obs0 = base.select(col("u"), col("v"))
+    val seed = base.select(col("u"), col("v"))
       .union(base.select(col("v").as("u"), col("u").as("v")))
-      .observe("kcore_round_0", count(lit(1)).as("n"))
-    var e: DataFrame = obs0.localCheckpoint()
     // early exit at fixpoint: an unchanged edge count means no node
     // peeled, and peel rounds are IDEMPOTENT at fixpoint — so stopping
     // early yields exactly the `rounds`-round answer while an oracle
     // that unrolls all `rounds` rounds replays no-ops. A long cascade
     // (one node per round) still terminates within `rounds`.
-    var edgeCount = observedCount(obs0, "kcore_round_0")
-    var r = 0
-    var fixed = false
-    while (r < rounds && !fixed) {
-      val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("u").as("kept"))
-      val prev = e
-      val obs = e
-        .join(keep.withColumnRenamed("kept", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("kept", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .observe(s"kcore_round_${r + 1}", count(lit(1)).as("n"))
-      e = obs.localCheckpoint()
-      // superseded round's blocks are dead once the new round exists
-      org.apache.spark.sql.graft.CheckpointBridge.release(prev)
-      val n2 = observedCount(obs, s"kcore_round_${r + 1}")
-      fixed = n2 == edgeCount
-      edgeCount = n2
-      r += 1
+    var edgeCount = -1L
+    val last = Rounds.run(seed, rounds, count(lit(1)).as("n")) { r =>
+      val n = r.census.getAs[Long]("n")
+      if (n == edgeCount) None
+      else {
+        edgeCount = n
+        val keep = r.frame.groupBy("u").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("u").as("kept"))
+        Some(r.frame
+          .join(keep.withColumnRenamed("kept", "u"), Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("kept", "v"), Seq("v"), "left_semi")
+          .select(col("u"), col("v")))
+      }
     }
-    e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-  }
-
-  /** True when `df`'s size estimate sits under the session broadcast
-    * threshold — the shared gate for both the per-round join strategy
-    * and the checkpoint cadence (broadcast-regime graphs run their
-    * recurrences lazily; big graphs checkpoint per round). */
-  private def broadcastLazy(df: DataFrame): Boolean = {
-    val bc = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    bc > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= bc
+    last.frame.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** The loop-invariant graph artifacts [[pageRank]] builds before its
@@ -254,78 +227,37 @@ object Graph {
         if (teleport.isEmpty) lit((1 - damping) / n)
         else lit(1 - damping) * tv
       // Σ floor(rank·1e12) over sinks — one exact integer scalar per
-      // round. It rides the SAME action that checkpoints the round's
-      // ranks as an observed metric (CollectMetrics accumulator), so
-      // the redistribute arm launches ZERO extra jobs per round: the
-      // previous shape (a 1-row sink aggregate crossJoined into the
-      // next-rank plan) paid a broadcast-build job — a scan of the
-      // checkpointed ranks plus a job floor — every round beside the
-      // rank job. The scalar then enters the next round's expressions
-      // as a driver literal with the identical double operation order
-      // (du→double, /1e12, then /n or ·tv), so ranks are bit-for-bit
-      // what the crossJoin produced.
-      val sinkMetric = coalesce(sum(when(!col("has_out"),
-        floor(col("rank") * lit(1e12))).otherwise(lit(0L))), lit(0L)).as("du")
-      def observedDu(d: org.apache.spark.sql.Dataset[_], name: String): Long =
-        d.queryExecution.observedMetrics(name).getAs[Long]("du")
+      // round, read as the round's census (no extra job). It enters the
+      // next round's expressions as a literal with the identical double
+      // operation order (du→double, /1e12, then /n or ·tv), so
+      // ranks are bit-for-bit what an in-plan crossJoin of the 1-row
+      // sink aggregate produced. This arm is inherently eager: each
+      // round's sink mass must be a literal before the NEXT round's plan
+      // exists.
+      val sinkMetric =
+        if (!danglingRedistribute) Nil
+        else Seq(coalesce(sum(when(!col("has_out"),
+          floor(col("rank") * lit(1e12))).otherwise(lit(0L))), lit(0L)).as("du"))
       val init = nodes.select(col("node"), col("has_out"), col("is_seed"),
         initRank.as("rank"))
-      // Checkpoint cadence note: LAZY rounds (the HITS treatment) were
-      // A/B'd here for broadcast-regime graphs and REVERTED — eager
-      // per-round checkpoints measured faster (q_textrank warm 2.3 s
-      // eager vs 3.2-3.7 s lazy-with-final-materialize vs 3.9 s naive
-      // lazy): the recurrence's repeated nodes/ed references re-plan
-      // and partially recompute under one big plan, where the
-      // checkpointed rounds keep each round's plan trivially small.
-      // HITS differs because its per-round normalize adds TWO extra
-      // aggregate+crossJoin subtrees per round, so its per-round jobs
-      // were twice as many. The dangling arm is inherently eager —
-      // each round's sink mass must become a driver literal before the
-      // NEXT round's plan exists.
-      var du = 0L
-      var rank =
-        if (!danglingRedistribute) init.localCheckpoint()
-        else {
-          val obs = init.observe("pr_sink_0", sinkMetric)
-          val ck = obs.localCheckpoint()
-          du = observedDu(obs, "pr_sink_0")
-          ck
-        }
-      for (i <- 1 to iters) {
-        val prev = rank
+      val last = Rounds.run(init, iters, sinkMetric: _*) { r =>
         val units = ed
-          .join(rank.withColumnRenamed("node", "src"), "src")
+          .join(r.frame.withColumnRenamed("node", "src"), "src")
           .groupBy(col("dst").as("node"))
           .agg(sum(floor(col("rank") / col("deg") * lit(1e12))).as("u"))
-        val dangTerm: Column =
-          if (teleport.isEmpty) lit(du.toDouble / 1e12 / n.toDouble)
-          else lit(du.toDouble / 1e12) * tv
-        val joined = nodes.join(units, Seq("node"), "left")
-        val next =
-          if (!danglingRedistribute)
-            joined.select(col("node"), col("has_out"), col("is_seed"),
-              floor12(teleTerm + lit(damping) *
-                (coalesce(col("u"), lit(0L)).cast("double") / lit(1e12))).as("rank"))
-          else
-            joined.select(col("node"), col("has_out"), col("is_seed"),
-              floor12(teleTerm + lit(damping) *
-                (coalesce(col("u"), lit(0L)).cast("double") / lit(1e12) +
-                  dangTerm))
-                .as("rank"))
-        rank =
-          if (!danglingRedistribute || i == iters) next.localCheckpoint()
+        val inMass = coalesce(col("u"), lit(0L)).cast("double") / lit(1e12)
+        val mass =
+          if (!danglingRedistribute) inMass
           else {
-            val obs = next.observe(s"pr_sink_$i", sinkMetric)
-            val ck = obs.localCheckpoint()
-            du = observedDu(obs, s"pr_sink_$i")
-            ck
+            val du = r.census.getAs[Long]("du")
+            inMass + (if (teleport.isEmpty) lit(du.toDouble / 1e12 / n.toDouble)
+              else lit(du.toDouble / 1e12) * tv)
           }
-        // the superseded round's checkpoint blocks are dead the moment
-        // the new round materialized — drop them so in-flight residency
-        // is one round, not `iters` (guide §5)
-        org.apache.spark.sql.graft.CheckpointBridge.release(prev)
+        Some(nodes.join(units, Seq("node"), "left")
+          .select(col("node"), col("has_out"), col("is_seed"),
+            floor12(teleTerm + lit(damping) * mass).as("rank")))
       }
-      rank.select(col("node"), col("rank"))
+      last.frame.select(col("node"), col("rank"))
     } finally {
       // only the per-call seed-flagged node frame: the PreparedGraph
       // frames belong to the caller (pageRank's wrapper releases them)
@@ -350,7 +282,7 @@ object Graph {
     * Scale shape: identical to the uniform arm — the weight-annotated
     * edge list builds once (distinct-fold of multi-edges, one weight-
     * sum join, src-partitioned persist) and each round is one edge
-    * join + one hash aggregate; per-round localCheckpoint cadence. */
+    * join + one hash aggregate. */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85): DataFrame = {
     val g = prepareWeighted(edges)
@@ -413,24 +345,18 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val n = g.n
     val floor12 = (c: Column) => floor(c * lit(1e12)).cast("double") / lit(1e12)
-    var rank = g.nodes.select(col("node"),
-      floor12(lit(1.0) / n).as("rank")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = rank
+    val init = g.nodes.select(col("node"), floor12(lit(1.0) / n).as("rank"))
+    Rounds.run(init, iters) { r =>
       val units = g.ed
-        .join(rank.withColumnRenamed("node", "src"), "src")
+        .join(r.frame.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("(CAST(floor(rank * 1e12) AS BIGINT) * w) div ws")).as("u"))
-      val next = g.nodes.select(col("node"))
+      Some(g.nodes.select(col("node"))
         .join(units, Seq("node"), "left")
         .select(col("node"),
           floor12(lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("u"), lit(0L)).cast("double") / lit(1e12))).as("rank"))
-      rank = next.localCheckpoint()
-      // superseded round's blocks are dead once the new round exists
-      org.apache.spark.sql.graft.CheckpointBridge.release(prev)
-    }
-    rank
+            (coalesce(col("u"), lit(0L)).cast("double") / lit(1e12))).as("rank")))
+    }.frame
   }
 
   /** k-hop reach census — for every node, the number of DISTINCT
@@ -442,8 +368,7 @@ object Graph {
     * cost term is the wedge count Σ deg² at k = 2 (the same term the
     * triangle census carries — a graph with bounded degree keeps it
     * linear in E, a power-law hub makes it the true answer's own
-    * size, since reach IS the pair set being counted). Per-level
-    * localCheckpoint keeps the plan flat (the [[pageRank]] cadence). */
+    * size, since reach IS the pair set being counted). */
   def kHopReach(edges: DataFrame, k: Int = 2): DataFrame = {
     require(k >= 1 && k <= 4, s"k must be in [1, 4] (pair sets explode past that), got $k")
     val base = edges
@@ -464,23 +389,17 @@ object Graph {
     // a data-proportional width undershoots less at scale than #cores
     val par = graft.Spread.count(e)
     val eBySrc = e.repartition(par, col("src"))
-    var pairs = e
-    for (_ <- 2 to k) {
-      val prev = pairs
-      pairs = pairs.as("a")
+    // level 1 is `e` itself, which Rounds reads but never releases:
+    // eBySrc reads it on every level
+    val pairs = Rounds.run(e, k - 1) { r =>
+      Some(r.frame.as("a")
         .repartition(par, col("a.dst"))
         .join(eBySrc.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .union(pairs)
-        .distinct()
-        .localCheckpoint()
-      // superseded level's blocks are dead once the new level exists
-      // (never `e` itself: eBySrc still reads it on later levels — at
-      // k = 2, the only gated k, prev IS e and the loop runs once)
-      if (!(prev eq e))
-        org.apache.spark.sql.graft.CheckpointBridge.release(prev)
-    }
+        .union(r.frame)
+        .distinct())
+    }.frame
     pairs.groupBy(col("src").as("node")).agg(count(lit(1)).as("reach"))
   }
 
@@ -499,8 +418,7 @@ object Graph {
     * edge→label equi-join (map-side combined, shuffle O(E)) and ONE
     * argmax aggregate rendered as `max(struct(count, -label))` —
     * bounded-state aggregates, no per-node window sort, nothing
-    * all-pairs. `localCheckpoint` per round keeps the plan flat (the
-    * [[pageRank]] cadence, A/B'd in round 12). Input edges may arrive
+    * all-pairs. Input edges may arrive
     * directed or duplicated: they are symmetrized and de-duplicated
     * first, self-loops dropped (a self-vote would freeze every node). */
   def labelPropagate(edges: DataFrame, rounds: Int = 2): DataFrame = {
@@ -535,28 +453,22 @@ object Graph {
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var labels = e.select(col("src").as("node")).distinct()
+      val seed = e.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl"))
-        .localCheckpoint()
-      for (_ <- 1 to rounds) {
-        val prev = labels
+      Rounds.run(seed, rounds) { r =>
         val counts = e
-          .join(labels.withColumnRenamed("node", "src"), "src")
+          .join(r.frame.withColumnRenamed("node", "src"), "src")
           .groupBy(col("dst").as("node"), col("lbl"))
           .agg(count(lit(1)).as("cnt"))
         // argmax(count DESC, label ASC) as one aggregate: max over
         // (cnt, -lbl) structs picks the highest count, then the highest
         // negated label = the smallest label (ids are non-negative in
         // every caller — fingerprints/keys — so negation cannot wrap)
-        labels = counts
+        Some(counts
           .groupBy("node")
           .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("lbl"))
-          .localCheckpoint()
-        // superseded round's blocks are dead once the new round exists
-        org.apache.spark.sql.graft.CheckpointBridge.release(prev)
-      }
-      labels
+          .select(col("node"), (-col("m.nl")).as("lbl")))
+      }.frame
     } finally e.unpersist(blocking = false)
   }
 
@@ -670,8 +582,11 @@ object Graph {
     * shuffles once at first materialization (reading the already-
     * cached distinct, never recomputing it); every later round moves
     * only the O(N) score table instead of `2·rounds·O(E)`. The
-    * normalizing Σ is a 1-row aggregate
-    * crossJoined in-plan (never collected). Self-loops are dropped
+    * normalizing Σ is a 1-row aggregate crossJoined in-plan (never
+    * collected). A round's two score tables are left-joined onto the
+    * node set and checkpointed as one `(node, a, h)` table, so each
+    * round is one job and the result is materialized on return.
+    * Self-loops are dropped
     * (a self-citation is not an endorsement); duplicate edges fold by
     * `distinct`. Returns `(node, auth_units, hub_units)` for every
     * node, zeros where a side never receives mass (sources have
@@ -727,56 +642,35 @@ object Graph {
             // everything is ≥ 0) — a decimal `/` + cast would ROUND
             expr("CAST((raw * 1000000000000) DIV s AS BIGINT)").as(outCol))
       }
-      // checkpoint cadence follows the SAME size gate as the join
-      // strategy: in the broadcast regime the whole recurrence stays
-      // LAZY — the repeated subtree references (each normalize reads
-      // its raw twice; each round reads the previous) collapse via
-      // exchange reuse into ONE job of ~15 stages, where per-round
-      // eager checkpoints ran ~8 driver jobs / 31 stages of pure
-      // scheduling floor (A/B'd at sf0.1: 4.5 → ~2 s warm). On a big
-      // (partitioned-twins) graph the rounds checkpoint as before —
-      // there lineage bounding and round-sized materialization matter.
-      var hub = nodes.select(col("node"), lit(1000000L).as("h"))
-      var auth: DataFrame = null
-      for (r <- 1 to rounds) {
-        val prevAuth = auth
-        val prevHub = hub
-        val aRaw = eSrc
-          .join(hub.withColumnRenamed("node", "src"), "src")
+      // one round over (node, h): auth from hubs, then hubs from auth,
+      // both joined back onto every node (0 where a side gets no mass)
+      def round(state: DataFrame): DataFrame = {
+        val auth = normalize(eSrc
+          .join(state.select(col("node").as("src"), col("h")), "src")
           .groupBy(col("dst").as("node"))
-          .agg(sum(col("h").cast("decimal(38,0)")).cast("decimal(38,0)").as("raw"))
-        auth =
-          if (broadcastRegime) normalize(aRaw, "a")
-          else normalize(aRaw, "a").localCheckpoint()
-        if (!broadcastRegime && prevAuth != null)
-          org.apache.spark.sql.graft.CheckpointBridge.release(prevAuth)
-        val hRaw = eDst
+          .agg(sum(col("h").cast("decimal(38,0)")).cast("decimal(38,0)").as("raw")), "a")
+        val hub = normalize(eDst
           .join(auth.withColumnRenamed("node", "dst"), "dst")
           .groupBy(col("src").as("node"))
-          .agg(sum(col("a").cast("decimal(38,0)")).cast("decimal(38,0)").as("raw"))
-        hub =
-          if (broadcastRegime) normalize(hRaw, "h")
-          else normalize(hRaw, "h").localCheckpoint()
-        // round 1's prevHub is the un-checkpointed init frame (release
-        // is a no-op there); later rounds drop the superseded blocks
-        if (!broadcastRegime && r > 1)
-          org.apache.spark.sql.graft.CheckpointBridge.release(prevHub)
+          .agg(sum(col("a").cast("decimal(38,0)")).cast("decimal(38,0)").as("raw")), "h")
+        nodes
+          .join(auth, Seq("node"), "left")
+          .join(hub, Seq("node"), "left")
+          .select(col("node"), coalesce(col("a"), lit(0L)).as("a"),
+            coalesce(col("h"), lit(0L)).as("h"))
       }
-      // nodes/auth/hub are all materialized (localCheckpoint is eager),
-      // so the edge twins can be dropped before the lazy final join
-      nodes
-        .join(auth, Seq("node"), "left")
-        .join(hub, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("a"), lit(0L)).as("auth_units"),
-          coalesce(col("h"), lit(0L)).as("hub_units"))
+      // round 1 runs on the constant init and is Rounds' round 0
+      val init = nodes.select(col("node"), lit(1000000L).as("h"))
+      Rounds.run(round(init), rounds - 1)(r => Some(round(r.frame))).frame
+        .select(col("node"), col("a").as("auth_units"), col("h").as("hub_units"))
     } finally {
-      twins.foreach(_.unpersist(blocking = false))
+      // the result is a checkpoint, so the twins are dead on return.
       // eBase is localCheckpointed, not persisted: Dataset.unpersist
       // would be a no-op there (the checkpoint blocks live on the RDD,
       // not in the CacheManager) — ContextCleaner reclaims them when
       // the RDD goes out of scope, as with every other localCheckpoint
       // in this file
+      twins.foreach(_.unpersist(blocking = false))
     }
   }
 }

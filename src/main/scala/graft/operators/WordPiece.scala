@@ -56,13 +56,13 @@ object WordPiece {
     * Rounds short-circuit when no pair remains. */
   def learnMerges(vocab0: DataFrame, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var vocab = vocab0.localCheckpoint()
+    // a round is (w, cnt, t): the token arrays feed both censuses, so
+    // they are written once, with the round, instead of split twice
+    def withToks(v: DataFrame): DataFrame =
+      v.select(col("w"), col("cnt"), toks(col("w")).as("t"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var step = 1
-    var done = false
-    while (step <= nMerges && !done) {
-      val tt = vocab.select(toks(col("w")).as("t"), col("cnt"))
-        .localCheckpoint() // two census consumers (symbols + pairs)
+    Rounds.run(withToks(vocab0), nMerges) { r =>
+      val tt = r.frame
       val syms = tt
         .select(explode(col("t")).as("sym"), col("cnt"))
         .groupBy("sym").agg(sum(col("cnt")).as("c"))
@@ -73,7 +73,7 @@ object WordPiece {
             element_at(col("t"), i + 1).as("b")))).as("p"), col("cnt"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("cnt")).as("s"))
-      val best = pairs
+      pairs
         .join(syms.select(col("sym").as("a"), col("c").as("ca")), "a")
         .join(syms.select(col("sym").as("b"), col("c").as("cb")), "b")
         .withColumn("su", expr(
@@ -81,17 +81,11 @@ object WordPiece {
             |DIV (CAST(ca AS DECIMAL(38,0)) * cb) AS BIGINT)""".stripMargin))
         .orderBy(col("su").desc, col("s").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val r = best(0)
-        merges += Merge(step, r.getAs[String]("a"), r.getAs[String]("b"),
-          r.getAs[Long]("s"), r.getAs[Long]("su"))
-        vocab = vocab
-          .select(Bpe.rewrite(col("w"), r.getAs[String]("a"), r.getAs[String]("b")).as("w"),
-            col("cnt"))
-          .localCheckpoint()
-        step += 1
-      }
+        .headOption.map { best =>
+          val (a, b) = (best.getAs[String]("a"), best.getAs[String]("b"))
+          merges += Merge(r.index + 1, a, b, best.getAs[Long]("s"), best.getAs[Long]("su"))
+          withToks(tt.select(Bpe.rewrite(col("w"), a, b).as("w"), col("cnt")))
+        }
     }
     merges.toSeq
   }

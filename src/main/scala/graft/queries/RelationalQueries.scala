@@ -855,7 +855,7 @@ object RelationalQueries {
     // shares the session-memoized distinct edge list with
     // q_pagerank_dangling (both rank the customer→order graph)
     val edges = custOrderEdges(s, dir)
-    val hb = graft.operators.Graph.hits(edges, rounds = 2).localCheckpoint()
+    val hb = graft.operators.Graph.hits(edges, rounds = 2)
     def top(c: String, side: String) = hb
       .orderBy(col(c).desc, col("node")).limit(25)
       .select(lit(side).as("side"), col("node"), col(c).as("units"))

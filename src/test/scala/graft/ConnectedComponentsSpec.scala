@@ -55,6 +55,22 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     check(es)
   }
 
+  test("over a checkpointed pair frame neither variant leaves a cache entry") {
+    val es = Seq((1L, 2L), (2L, 3L), (5L, 6L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    val cc: Seq[DataFrame => DataFrame] =
+      Seq(Dedup.connectedComponents(_), Dedup.connectedComponentsStar(_))
+    for (f <- cc) {
+      spark.catalog.clearCache()
+      assert(asMap(f(pairs(es).localCheckpoint())) == want)
+      assert(spark.sharedState.cacheManager.isEmpty, "edge list left cached")
+      // over a stable source the entry stays for plan-match reuse
+      assert(asMap(f(pairs(es))) == want)
+      assert(!spark.sharedState.cacheManager.isEmpty)
+    }
+    spark.catalog.clearCache()
+  }
+
   test("star converges in few rounds on a long chain") {
     // diameter 200 would need 200 propagation rounds; the contraction
     // must finish well under its default 25-round budget

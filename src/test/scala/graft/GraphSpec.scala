@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Graph
+import graft.operators.{Bpe, Dedup, Graph}
 
 /** PageRank: the structural properties (uniform fixpoint on regular
   * graphs, hub dominance, mass conservation up to the documented floor
@@ -502,5 +502,40 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       val viaTwins = hitsMap(edges, rounds = 2)
       assert(viaTwins == viaBroadcast)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  // ---- the Rounds loop ----
+
+  test("plan size is the same at 3 and 8 rounds for every iterative operator") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val directed = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+    val symmetric = directed.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
+    val edges = directed.toDF("src", "dst")
+    val sym = symmetric.toDF("src", "dst")
+    val weighted = symmetric.map { case (s, d) => (s, d, 1L + (s + d) % 3) }.toDF("src", "dst", "w")
+    // a chain needs about as many propagation rounds as it has links
+    def chain(n: Int) = (0L until n.toLong).map(i => (i, i + 1)).toDF("a", "b")
+    val text = Seq("low low low lower newest newest newest widest wider wide").toDF("text")
+    val ops: Seq[(String, Int => DataFrame)] = Seq(
+      "kCorePeel" -> (r => Graph.kCorePeel(sym.toDF("a", "b"), 3, r)),
+      "pageRank" -> (r => Graph.pageRank(sym, r)),
+      "pageRankPersonalized" -> (r =>
+        Graph.pageRankPersonalized(sym, Seq(1L, 2L).toDF("node"), r)),
+      "pageRank dangling" -> (r => Graph.pageRank(edges, r, danglingRedistribute = true)),
+      "pageRankWeighted" -> (r => Graph.pageRankWeighted(weighted, r)),
+      // k is capped at 4, so its levels run 2 and 3
+      "kHopReach" -> (r => Graph.kHopReach(sym, k = if (r < 8) 3 else 4)),
+      "labelPropagate" -> (r => Graph.labelPropagate(sym, r)),
+      "hits" -> (r => Graph.hits(edges, r)),
+      "connectedComponents" -> (r => Dedup.connectedComponents(chain(r))),
+      "connectedComponentsStar" -> (r => Dedup.connectedComponentsStar(chain(4 * r))),
+      "Bpe.learn" -> (r => Bpe.learn(text, col("text"), r)))
+    def planNodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case n => n }.size
+    for ((name, op) <- ops)
+      assert(planNodes(op(3)) == planNodes(op(8)), name)
+    // the 12-round HITS the lazy broadcast-regime plan (~4^rounds nodes)
+    // could not plan, checked against the exact model
+    assert(hitsMap(directed, rounds = 12) == hitsModel(directed, rounds = 12))
   }
 }

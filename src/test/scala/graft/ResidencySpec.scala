@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{Bpe, Dedup, Graph, WordPiece}
 
 /** The residency ledger (round-18 GC fix): pinned memo builds survive
   * [[Residency.sweep]], per-execution checkpoint scratch does not,
@@ -15,6 +18,9 @@ class ResidencySpec extends AnyFunSuite with BeforeAndAfterAll {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
+    // no GC-driven cleanup: a checkpoint stays live until released, so
+    // the census below counts exactly what each operator leaves behind
+    .config("spark.cleaner.referenceTracking", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -68,5 +74,41 @@ class ResidencySpec extends AnyFunSuite with BeforeAndAfterAll {
     // -> 128 partitions at the 64 MB target (no execution happens)
     val big = spark.range(1L << 30).toDF("a")
     assert(Spread.count(big) == math.max(floor, 128))
+  }
+
+  test("iterative operators leave as many checkpoints after 6 rounds as after 2") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val directed = Seq.fill(200)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+    val symmetric = directed.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
+    val edges = directed.toDF("src", "dst")
+    val sym = symmetric.toDF("src", "dst")
+    val weighted = symmetric.map { case (s, d) => (s, d, 1L + (s + d) % 3) }.toDF("src", "dst", "w")
+    // a chain needs about as many propagation rounds as it has links
+    def chain(n: Int) = (0L until n.toLong).map(i => (i, i + 1)).toDF("a", "b")
+    val vocab = Bpe.vocabCensus(
+      Seq("low low low lower newest newest newest widest wider wide").toDF("text"), col("text"))
+    val ops: Seq[(String, Int => Any)] = Seq(
+      "kCorePeel" -> (r => Graph.kCorePeel(sym.toDF("a", "b"), 3, r)),
+      "pageRank" -> (r => Graph.pageRank(sym, r)),
+      "pageRankPersonalized" -> (r =>
+        Graph.pageRankPersonalized(sym, Seq(1L, 2L).toDF("node"), r)),
+      "pageRank dangling" -> (r => Graph.pageRank(edges, r, danglingRedistribute = true)),
+      "pageRankWeighted" -> (r => Graph.pageRankWeighted(weighted, r)),
+      // k is capped at 4, so its levels run 1 and 3
+      "kHopReach" -> (r => Graph.kHopReach(sym, k = math.min(r, 4))),
+      "labelPropagate" -> (r => Graph.labelPropagate(sym, r)),
+      "hits" -> (r => Graph.hits(edges, r)),
+      "connectedComponents" -> (r => Dedup.connectedComponents(chain(r))),
+      "connectedComponentsStar" -> (r => Dedup.connectedComponentsStar(chain(4 * r))),
+      "Bpe.learnMerges" -> (r => Bpe.learnMerges(vocab, r)),
+      "WordPiece.learnMerges" -> (r => WordPiece.learnMerges(vocab, r)))
+    def leftBehind(op: Int => Any, rounds: Int): Int = {
+      val before = liveCheckpointIds
+      op(rounds)
+      (liveCheckpointIds -- before).size
+    }
+    for ((name, op) <- ops)
+      assert(leftBehind(op, 2) == leftBehind(op, 6), name)
   }
 }

@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 
+import org.apache.spark.sql.graft.CheckpointBridge
+
 import graft.functions.VectorFunctions._
 import graft.functions.expressions.Kernels
-import graft.index.{HnswGraph, HnswIndex, HnswParams, IvfIndex, ProductQuantizer, ScalarQuantizer}
+import graft.index.{HnswGraph, HnswIndex, HnswParams, IvfIndex, ProductQuantizer}
 import graft.operators.{Knn, TopK}
 
 /** User-facing database handle — the Spark rendering of the reference's
@@ -50,65 +52,25 @@ final class VectorDB private (
         coalesce(size(col(vecCol)).cast("string"), lit("NULL")),
         col(idCol).cast("string")))))
 
-  private var index: Option[Dataset[HnswIndex.IndexRow]] = None
-  private var ivfModel: Option[IvfIndex.Model] = None
+  /** Everything this handle serves from, as one immutable value (see
+    * [[VectorDB.Serving]]): a build installs a new value, a derived
+    * handle gets its own, so no piece of it can drift from another. */
+  private var state: VectorDB.Serving = VectorDB.Serving()
   /** The parquet path this handle was opened on (None for add/remove
     * lineage handles) — recorded by [[save]] so [[VectorDB.load]] can
     * reopen the corpus without copying it. */
   private var sourcePath: Option[String] = None
-  /** Compressed serving state (mutually exclusive with the HNSW
-    * index): the encoded-codes table plus the model that decodes it. */
-  private var pqState: Option[(DataFrame, ProductQuantizer.Model)] = None
-  private var sqState: Option[(DataFrame, Seq[Double], Seq[Double])] = None
-  /** Binary (sign-bit) codes — the 1-bit serving mode. No model state:
-    * the sign threshold is fixed, so encode is stateless and
-    * maintenance can never expand any trained bound. */
-  private var bqState: Option[DataFrame] = None
 
-  /** True when any compressed (PQ/SQ/BQ) codes table is serving. */
-  private def servesCompressed: Boolean =
-    pqState.isDefined || sqState.isDefined || bqState.isDefined
-  /** Attribute columns packed into index-row payloads at the last
-    * build — the exact arm packs the same map on the fly so
-    * [[searchWhere]] predicates mean the same thing on both arms. */
-  private var servedPayloadCols: Seq[String] = Nil
-  private var indexMetric: String = Knn.L2
-  /** MIPS serving state: the max squared corpus norm captured at
-    * `buildIndexIvf(metric = Dot)` time. The dot index is an L2 graph
-    * over norm-AUGMENTED vectors — each x extends with
-    * sqrt(M² − ‖x‖²) so every augmented vector has norm M and
-    * argmin-L2 against the 0-extended query is argmax-dot — and adds
-    * must augment with the SAME M or their graph distances shear. */
-  private var mipsMaxNormSq: Option[Double] = None
-  /** The metric the USER chose, surviving index loss: add/remove return
-    * index-less handles, and without this a handle built with
-    * `buildIndexIvf(metric = Cosine)` would silently serve exact L2
-    * (a ranking-semantics change, not a precision change) until the
-    * index is rebuilt. The no-index arm serves exact search under this
-    * metric instead. */
-  private var intendedMetric: String = Knn.L2
-  /** Build-time shape knobs, recorded so metric-preserving rebuilds
-    * (a norm-expanding add on a dot handle retrains the whole serving
-    * state) replay the USER's configuration — cell count, iteration
-    * budget, codebook shape — instead of library defaults. */
-  private var ivfBuildParams: Option[(Int, Int)] = None
-  private var pqBuildParams: Option[(Int, Int, Int, Int, Int)] = None
-  private var sqBuildParams: Option[(Int, Int)] = None
-  private var bqBuildParams: Option[(Int, Int)] = None
-  /** OPQ serving state ([[buildIndexOpq]]): the energy-balanced dim
-    * permutation the PQ router/codebooks were trained under. Applied
-    * IN SERVING SPACE (after the metric reduction) to the corpus at
-    * build/encode time and to every query at reduce time, so the
-    * whole compressed pipeline — routing, codes, ADC — runs permuted
-    * while exact/refine arms stay on the raw vectors (a permutation
-    * is orthogonal: refined distances are true distances). */
-  private var opqPerm: Option[Array[Int]] = None
-  private var opqBuildParams: Option[(Int, Int, Int, Int, Int)] = None
-  /** The corpus-global training artifact this handle was encoded
-    * against ([[buildIndexShared]]) — presence is what makes the
-    * handle MERGEABLE with fingerprint-equal peers, including the
-    * compressed and dot modes that shard-local training locks out. */
-  private var sharedTraining: Option[graft.index.SharedTraining] = None
+  /** The metric the user chose. It survives index loss: a handle
+    * without an index serves exact search under it, so a cosine handle
+    * never silently serves L2. */
+  private def metric: String = state.metric
+
+  /** True when a compressed (PQ/OPQ/SQ/BQ) codes table is serving. */
+  private def servesCompressed: Boolean = state.compressed
+
+  /** The served HNSW index rows, when the handle serves a graph. */
+  private def index: Option[Dataset[HnswIndex.IndexRow]] = state.index
 
   /** Cells probed per query when an IVF router is trained. */
   var nprobe: Int = 3
@@ -144,7 +106,7 @@ final class VectorDB private (
   private var graphRouterCache: Option[IvfIndex.GraphRouter] = None
   private def routerGraphOpt: Option[IvfIndex.GraphRouter] =
     if (graphRouteEf <= 0) None
-    else ivfModel.map { m =>
+    else state.router.map { m =>
       graphRouterCache match {
         case Some(g) if g.model eq m => g
         case _ =>
@@ -175,37 +137,16 @@ final class VectorDB private (
     * handles serve ADC and report false here. */
   def hasIndex: Boolean = index.isDefined
 
-  /** Release and clear every piece of cached serving state — called at
-    * the top of each buildIndex* so a rebuild can never leave a
-    * superseded generation pinned in the executor cache (a long-lived
-    * handle that rebuilds N times would otherwise hold N dead index
-    * datasets at MEMORY_AND_DISK), and so stale routers/metrics can't
-    * leak into the new configuration. Rebuilds read only the corpus,
-    * never the old index, so the release is safe before the new build
-    * materializes. */
-  private def dropServingState(): Unit = {
+  /** Release this handle's cached serving state and reset it — called
+    * at the top of every build, so a rebuild never leaves a superseded
+    * generation pinned in the executor cache and no router, metric or
+    * artifact of the old configuration leaks into the new one. Builds
+    * read only the corpus, so releasing first is safe. */
+  private def release(): Unit = {
     localCells.clear()
     localCodeCells.clear()
-    index.foreach(_.unpersist(blocking = false))
-    pqState.foreach(_._1.unpersist(blocking = false))
-    sqState.foreach(_._1.unpersist(blocking = false))
-    bqState.foreach(_.unpersist(blocking = false))
-    index = None
-    pqState = None
-    sqState = None
-    bqState = None
-    ivfModel = None
-    indexMetric = Knn.L2
-    intendedMetric = Knn.L2
-    mipsMaxNormSq = None
-    servedPayloadCols = Nil
-    ivfBuildParams = None
-    pqBuildParams = None
-    sqBuildParams = None
-    bqBuildParams = None
-    opqPerm = None
-    opqBuildParams = None
-    sharedTraining = None
+    state.table.foreach(_.unpersist(blocking = false))
+    state = VectorDB.Serving()
   }
 
   /** Build the ANN index over an optional contiguous id range
@@ -215,11 +156,7 @@ final class VectorDB private (
   def buildIndex(startId: Long = Long.MinValue, endId: Long = Long.MaxValue,
       numParts: Int = 16, partCol: Option[String] = None,
       payloadCols: Seq[String] = Nil): Dataset[HnswIndex.IndexRow] = {
-    // a plain rebuild replaces whatever was there: release the
-    // superseded cache and reset router/metric, or search() would
-    // dispatch to the cosine arm (and route through a stale unit-space
-    // model) against an L2 hash-partitioned graph
-    dropServingState()
+    release()
     val ranged = vectors.filter(col(idCol) >= startId && col(idCol) < endId)
     val parted = partCol match {
       case Some(c) => ranged.withColumn("part", col(c).cast("int"))
@@ -229,86 +166,20 @@ final class VectorDB private (
     // this every query re-executes the whole graph construction lineage
     val built = HnswIndex.build(parted, params, idCol, vecCol, "part", payloadCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    index = Some(built)
-    servedPayloadCols = payloadCols
+    state = VectorDB.Serving(table = Some(built.toDF()), payloadCols = payloadCols)
     built
   }
 
-  /** The MIPS→L2 augmentation: extend `v` with sqrt(M² − ‖v‖²) so the
-    * augmented corpus lies on a sphere of radius M and L2 ranking
-    * against the 0-extended query equals dot-product ranking
-    * (Bachrach et al.'s order-preserving reduction). The `greatest(0,·)`
-    * clamp only absorbs float rounding at ‖v‖ ≈ M: vectors with norms
-    * genuinely above M never reach this expression — [[add]] detects
-    * them and rebuilds under the new M, because a clamped over-norm
-    * vector would carry a +(‖v‖²−M²) penalty in augmented space and
-    * the walk could miss it entirely (recall loss, not just rank
-    * noise). */
-  private def mipsAugment(v: org.apache.spark.sql.Column, maxNormSq: Double) =
-    graft.index.SharedTraining.mipsAugment(v, maxNormSq)
-
-  /** Zero-pad a `from`-wide vector column to `width`: PQ subspaces must
-    * divide the encoded width, and zero pads are metric-neutral — the
-    * query pads with zeros too, so every padded dim contributes 0 to
-    * any distance. */
-  private def zeroPad(v: org.apache.spark.sql.Column, width: Int, from: Int) =
-    graft.index.SharedTraining.zeroPad(v, width, from)
-
-  /** The corpus mapped into `metric`'s serving space — the shared
-    * preprocessing behind the HNSW AND compressed (PQ/SQ) builds:
-    * unit-normalize for cosine (L2 ranking on unit vectors = cosine
-    * ranking), norm-augment for dot ([[mipsAugment]] — captures
-    * [[mipsMaxNormSq]]; one max-norm aggregate, then a map-only
-    * extension), raw for L2. `width` > the mapped dimensionality adds
-    * zero pads (PQ divisibility). */
-  private def reducedCorpus(metric: String, width: Int): DataFrame = metric match {
-    case Knn.Cosine => vectors.withColumn(vecCol, l2Normalize(col(vecCol)))
-    case Knn.Dot =>
-      // nullable read: agg(max(...)) over an EMPTY corpus yields null,
-      // and an empty dot build must behave like every other metric's
-      // (no rows, no geometry) instead of NPEing
-      val row = vectors.agg(max(dotNative(col(vecCol), col(vecCol)))).head()
-      val m2 = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      mipsMaxNormSq = Some(m2)
-      vectors.withColumn(vecCol, zeroPad(mipsAugment(col(vecCol), m2), width, dims + 1))
-    case _ => vectors
-  }
-
-  /** A raw query vector mapped into the compressed index's serving
-    * space, driver-side — the float-exact mirror of [[reducedCorpus]]'s
-    * per-row map (same double accumulation order, same double→float
-    * rounding as [[graft.functions.VectorFunctions.l2Normalize]] /
-    * [[mipsAugment]]'s query side), so probe selection and ADC
-    * distances are bit-identical to an engine-side reduction. */
-  private def reduceQueryVec(q: Seq[Float]): Array[Float] = {
-    val r: Array[Float] = indexMetric match {
-      case Knn.Cosine =>
-        val a = q.toArray
-        val qa = UnsafeArrayData.fromPrimitiveArray(a)
-        val n = math.sqrt(Kernels.dot(qa, qa)) // l2Normalize's dotNative
-        if (n == 0.0) a else a.map(x => (x.toDouble / n).toFloat)
-      case Knn.Dot =>
-        // 0-extend over the augmentation dim and any PQ zero pad: the
-        // query's augmentation coordinate is 0 by the reduction
-        q.toArray.padTo(codesWidth, 0.0f)
-      case _ => q.toArray
-    }
-    // OPQ: the query enters the permuted space the codes live in
-    // (floats are reordered, never recomputed — bit-exact)
-    opqPerm.map(p => p.map(r)).getOrElse(r)
-  }
-
-  /** The width vectors were encoded at (augmentation + pads included). */
-  private def codesWidth: Int =
-    pqState.map { case (_, m) => m.numSub * m.subDim }
-      .orElse(sqState.map(_._2.length))
-      .getOrElse(if (indexMetric == Knn.Dot) dims + 1 else dims)
+  /** A raw query mapped into the serving space, driver-side (raw when
+    * no artifact is trained). */
+  private def reduceQueryVec(q: Seq[Float]): Array[Float] =
+    state.artifact.map(_.reduceQuery(q)).getOrElse(q.toArray)
 
   /** Exact distance under this handle's intended metric — what refine
     * passes and exact arms re-score with on the RAW vectors. */
   private def exactDist(vc: org.apache.spark.sql.Column,
       qc: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    intendedMetric match {
+    metric match {
       case Knn.Cosine => lit(1.0d) - cosineNative(vc, qc)
       case Knn.Dot    => -dotNative(vc, qc)
       case _          => l2SqNative(vc, qc)
@@ -327,29 +198,17 @@ final class VectorDB private (
     * cosine on the raw vectors.
     *
     * `metric = Knn.Dot` builds the MIPS serving configuration via the
-    * same shape: vectors are norm-augmented ([[mipsAugment]] — one
-    * max-norm aggregate over the corpus, then a map-only extension)
-    * before train/assign/build, and [[search]] 0-extends the query,
-    * walks the L2 graph, and re-scores with the exact double dot on
-    * the raw vectors (dist = −dot, ascending = largest dot first). */
+    * same shape: vectors are norm-augmented (each x extends with
+    * sqrt(M² − ‖x‖²) for the corpus max norm M — one max-norm
+    * aggregate, then a map-only extension; see
+    * [[graft.index.SharedTraining]]) before train/assign/build, and
+    * [[search]] 0-extends the query, walks the L2 graph, and re-scores
+    * with the exact double dot on the raw vectors (dist = −dot,
+    * ascending = largest dot first). */
   def buildIndexIvf(numCells: Int = 16, iters: Int = 5,
       metric: String = Knn.L2,
-      payloadCols: Seq[String] = Nil): Dataset[HnswIndex.IndexRow] = {
-    dropServingState()
-    val src = reducedCorpus(metric, if (metric == Knn.Dot) dims + 1 else dims)
-    val model = IvfIndex.train(src, numCells, iters, idCol, vecCol)
-    val parted = IvfIndex.assign(src, model, idCol, vecCol)
-      .withColumn("part", col("cell"))
-    val built = HnswIndex.build(parted, params, idCol, vecCol, "part", payloadCols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    index = Some(built)
-    servedPayloadCols = payloadCols
-    ivfModel = Some(model)
-    indexMetric = metric
-    intendedMetric = metric
-    ivfBuildParams = Some((numCells, iters))
-    built
-  }
+      payloadCols: Seq[String] = Nil): Dataset[HnswIndex.IndexRow] =
+    VectorDB.indexRows(trained("ivf", metric, VectorDB.BuildShape(numCells, iters), payloadCols))
 
   /** Build the IVF-PQ serving configuration — the standard
     * billion-scale shape (coarse quantizer routes to nprobe cells,
@@ -359,42 +218,19 @@ final class VectorDB private (
     * the raw vectors, is what search scans), and [[search]] dispatches
     * to ADC ranking within the probed cells. Replaces any HNSW index on
     * this handle (extension — the reference stores raw f32 only,
-    * `/root/reference/src/disk_store.rs:7-11`). */
+    * its `src/disk_store.rs:7-11`). */
   def buildIndexPq(numCells: Int = 16, routerIters: Int = 1, numSub: Int = 8,
       codebookK: Int = 16, pqIters: Int = 0, metric: String = Knn.L2,
-      payloadCols: Seq[String] = Nil): DataFrame = {
-    dropServingState()
-    // PQ subspaces must divide the encoded width: the dot reduction
-    // adds one augmentation dim, so pad to the next numSub multiple
-    val width = metric match {
-      case Knn.Dot => ((dims + 1 + numSub - 1) / numSub) * numSub
-      case _ =>
-        require(dims % numSub == 0, s"numSub=$numSub must divide dims=$dims")
-        dims
-    }
-    val src = reducedCorpus(metric, width)
-    val router = IvfIndex.train(src, numCells, routerIters, idCol, vecCol)
-    val model = ProductQuantizer.train(src, numSub, codebookK, pqIters, idCol, vecCol)
-    val codes = IvfIndex.assign(src, router, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        ProductQuantizer.encodeExpr(col(vecCol), model).as("codes"),
-        payExpr(payloadCols).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfModel = Some(router)
-    indexMetric = metric
-    intendedMetric = metric
-    servedPayloadCols = payloadCols
-    pqState = Some((codes, model))
-    pqBuildParams = Some((numCells, routerIters, numSub, codebookK, pqIters))
-    codes
-  }
+      payloadCols: Seq[String] = Nil): DataFrame =
+    trained("pq", metric,
+      VectorDB.BuildShape(numCells, routerIters, numSub, codebookK, pqIters), payloadCols)
 
   /** Build the OPQ serving configuration — [[buildIndexPq]] with the
     * energy-balanced dimension permutation ([[graft.index.Opq]], Ge et
     * al. CVPR'13 §4.1) trained first and applied in serving space:
     * router, codebooks, and codes all live in the permuted space
-    * (queries enter it via [[reduceQueryVec]]; incoming batches via
-    * [[reduceRows]], so add/remove/upsert/compact maintenance is
+    * (queries and incoming batches enter it through the artifact's
+    * reduction, so add/remove/upsert/compact maintenance is
     * permutation-correct with NO extra arms), while refine/exact
     * passes stay on the raw vectors — a permutation is orthogonal, so
     * exact distances are unchanged. The permutation itself is a
@@ -402,34 +238,9 @@ final class VectorDB private (
     * collect at build). */
   def buildIndexOpq(numCells: Int = 16, routerIters: Int = 1, numSub: Int = 8,
       codebookK: Int = 16, pqIters: Int = 0, metric: String = Knn.L2,
-      payloadCols: Seq[String] = Nil): DataFrame = {
-    dropServingState()
-    val width = metric match {
-      case Knn.Dot => ((dims + 1 + numSub - 1) / numSub) * numSub
-      case _ =>
-        require(dims % numSub == 0, s"numSub=$numSub must divide dims=$dims")
-        dims
-    }
-    val src0 = reducedCorpus(metric, width)
-    val perm = graft.index.Opq.energyBalancedPerm(src0, col(vecCol), width, numSub)
-    val src = src0.withColumn(vecCol,
-      graft.index.Opq.permuteExpr(col(vecCol), perm))
-    val router = IvfIndex.train(src, numCells, routerIters, idCol, vecCol)
-    val model = ProductQuantizer.train(src, numSub, codebookK, pqIters, idCol, vecCol)
-    val codes = IvfIndex.assign(src, router, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        ProductQuantizer.encodeExpr(col(vecCol), model).as("codes"),
-        payExpr(payloadCols).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfModel = Some(router)
-    indexMetric = metric
-    intendedMetric = metric
-    servedPayloadCols = payloadCols
-    pqState = Some((codes, model))
-    opqPerm = Some(perm)
-    opqBuildParams = Some((numCells, routerIters, numSub, codebookK, pqIters))
-    codes
-  }
+      payloadCols: Seq[String] = Nil): DataFrame =
+    trained("opq", metric,
+      VectorDB.BuildShape(numCells, routerIters, numSub, codebookK, pqIters), payloadCols)
 
   /** Build the int8 scalar-quantized serving configuration: per-dim
     * bounds trained from the corpus, byte codes 4× smaller than f32,
@@ -437,25 +248,8 @@ final class VectorDB private (
     * the serving shape; `metric` selects the same cosine/dot
     * reductions). */
   def buildIndexSq(numCells: Int = 16, routerIters: Int = 1,
-      metric: String = Knn.L2, payloadCols: Seq[String] = Nil): DataFrame = {
-    dropServingState()
-    val src = reducedCorpus(metric, if (metric == Knn.Dot) dims + 1 else dims)
-    val router = IvfIndex.train(src, numCells, routerIters, idCol, vecCol)
-    val (lo, hi) = ScalarQuantizer.bounds(ScalarQuantizer.train(src, vecCol))
-    val codes = IvfIndex.assign(src, router, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        ScalarQuantizer.encodeExpr(col(vecCol), lo, hi).as("codes"),
-        payExpr(payloadCols).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfModel = Some(router)
-    indexMetric = metric
-    intendedMetric = metric
-    servedPayloadCols = payloadCols
-    pqState = None
-    sqState = Some((codes, lo, hi))
-    sqBuildParams = Some((numCells, routerIters))
-    codes
-  }
+      metric: String = Knn.L2, payloadCols: Seq[String] = Nil): DataFrame =
+    trained("sq", metric, VectorDB.BuildShape(numCells, routerIters), payloadCols)
 
   /** Build the binary (sign-bit) serving configuration — the 1-bit
     * point on the quantization ladder ([[graft.index.BinaryQuant]]):
@@ -467,23 +261,20 @@ final class VectorDB private (
     * never expand trained state, so maintenance never triggers a
     * rebuild. Same routing/serving shape as [[buildIndexPq]]. */
   def buildIndexBq(numCells: Int = 16, routerIters: Int = 1,
-      metric: String = Knn.L2, payloadCols: Seq[String] = Nil): DataFrame = {
-    dropServingState()
-    val width = if (metric == Knn.Dot) dims + 1 else dims
-    val src = reducedCorpus(metric, width)
-    val router = IvfIndex.train(src, numCells, routerIters, idCol, vecCol)
-    val codes = IvfIndex.assign(src, router, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        graft.index.BinaryQuant.packExpr(col(vecCol), width).as("codes"),
-        payExpr(payloadCols).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfModel = Some(router)
-    indexMetric = metric
-    intendedMetric = metric
-    servedPayloadCols = payloadCols
-    bqState = Some(codes)
-    bqBuildParams = Some((numCells, routerIters))
-    codes
+      metric: String = Knn.L2, payloadCols: Seq[String] = Nil): DataFrame =
+    trained("bq", metric, VectorDB.BuildShape(numCells, routerIters), payloadCols)
+
+  /** Train `mode`'s serving state on this handle's own corpus through
+    * [[graft.index.SharedTraining.train]] — the only training path —
+    * and encode the corpus against it. The shape is recorded so a
+    * bound-expanding [[add]] rebuilds with the user's configuration. */
+  private def trained(mode: String, metric: String, shape: VectorDB.BuildShape,
+      payloadCols: Seq[String]): DataFrame = {
+    release()
+    val t = graft.index.SharedTraining.train(vectors, dims, mode, metric,
+      shape.numCells, shape.iters, shape.numSub, shape.codebookK, shape.pqIters,
+      idCol = idCol, vecCol = vecCol)
+    install(t, shared = false, Some(shape), payloadCols)
   }
 
   /** Build this handle's serving state by ENCODING the corpus against
@@ -506,10 +297,9 @@ final class VectorDB private (
       payloadCols: Seq[String] = Nil): DataFrame = {
     require(t.dims == dims,
       s"artifact dims ${t.dims} != handle dims $dims")
-    dropServingState()
+    release()
     if (t.metric == Knn.Dot) {
-      val bound = t.mipsMaxNormSq.getOrElse(throw new IllegalStateException(
-        "dot artifact without its trained max norm"))
+      val bound = t.maxNormSq
       val row = vectors.agg(max(dotNative(col(vecCol), col(vecCol)))).head()
       val shardM2 = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
       require(shardM2 <= bound,
@@ -517,58 +307,61 @@ final class VectorDB private (
           f"bound $bound%.6g - train SharedTraining on the union corpus, or " +
           "pass a normBoundSq that dominates every shard (a clamped over-norm " +
           "vector would silently lose recall)")
-      mipsMaxNormSq = Some(bound)
     }
-    val reduced = {
-      val r = t.metric match {
-        case Knn.Cosine => vectors.withColumn(vecCol, l2Normalize(col(vecCol)))
-        case Knn.Dot => vectors.withColumn(vecCol,
-          zeroPad(mipsAugment(col(vecCol), t.mipsMaxNormSq.get), t.width, dims + 1))
-        case _ => vectors
-      }
-      t.opqPerm
-        .map(p => r.withColumn(vecCol, graft.index.Opq.permuteExpr(col(vecCol), p)))
-        .getOrElse(r)
-    }
-    val assigned = IvfIndex.assign(reduced, t.router, idCol, vecCol)
-    def codesWith(enc: org.apache.spark.sql.Column): DataFrame =
-      assigned
-        .select(col(idCol), col("cell"), enc.as("codes"),
-          payExpr(payloadCols).as("payload"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out: DataFrame = t.mode match {
-      case "ivf" =>
-        val built = HnswIndex.build(assigned.withColumn("part", col("cell")),
-            params, idCol, vecCol, "part", payloadCols)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        index = Some(built)
-        built.toDF()
-      case "pq" | "opq" =>
-        val model = t.pqModel.getOrElse(throw new IllegalStateException(
-          s"${t.mode} artifact without codebooks"))
-        val codes = codesWith(ProductQuantizer.encodeExpr(col(vecCol), model))
-        pqState = Some((codes, model))
-        opqPerm = t.opqPerm
-        codes
-      case "sq" =>
-        val (lo, hi) = t.sqBounds.getOrElse(throw new IllegalStateException(
-          "sq artifact without trained bounds"))
-        val codes = codesWith(ScalarQuantizer.encodeExpr(col(vecCol), lo, hi))
-        sqState = Some((codes, lo, hi))
-        codes
-      case "bq" =>
-        val codes = codesWith(graft.index.BinaryQuant.packExpr(col(vecCol), t.width))
-        bqState = Some(codes)
-        codes
-      case m => throw new IllegalArgumentException(s"unknown artifact mode '$m'")
-    }
-    ivfModel = Some(t.router)
-    indexMetric = t.metric
-    intendedMetric = t.metric
-    servedPayloadCols = payloadCols
-    sharedTraining = Some(t)
-    out
+    install(t, shared = true, None, payloadCols)
   }
+
+  /** Encode this handle's corpus against `t` — the map-only half of
+    * every build: reduce into t's serving space, route through t's
+    * router, then build each cell's HNSW graph ("ivf") or encode one
+    * codes row per vector. The table persists lazily (the first search
+    * materializes it); `shared` marks a foreign artifact, the one a
+    * handle may merge on. */
+  private def install(t: graft.index.SharedTraining, shared: Boolean,
+      shape: Option[VectorDB.BuildShape], payloadCols: Seq[String]): DataFrame = {
+    val assigned = IvfIndex.assign(t.reduce(vectors, vecCol), t.router, idCol, vecCol)
+    val table =
+      if (t.compressed)
+        assigned.select(col(idCol), col("cell"), t.encodeExpr(col(vecCol)).as("codes"),
+          payExpr(payloadCols).as("payload"))
+      else
+        HnswIndex.build(assigned.withColumn("part", col("cell")),
+          params, idCol, vecCol, "part", payloadCols).toDF()
+    table.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    state = VectorDB.Serving(t.metric, Some(t), shared, Some(t.router), Some(table),
+      payloadCols, shape)
+    table
+  }
+
+  /** A handle over `corpus` serving `next` — the one way every derived
+    * handle is made: the serving value and every public serving knob
+    * carry over here, once. A handle over the same corpus keeps its
+    * source path. */
+  private def derive(corpus: DataFrame, next: VectorDB.Serving): VectorDB = {
+    val db = new VectorDB(corpus, dims, params, idCol, vecCol)
+    db.state = next
+    if (corpus eq raw) db.sourcePath = sourcePath
+    db.nprobe = nprobe
+    db.efSearch = efSearch
+    db.adaptiveAlpha = adaptiveAlpha
+    db.graphRouteEf = graphRouteEf
+    db.localCellRowCap = localCellRowCap
+    db.maxLocalCells = maxLocalCells
+    db
+  }
+
+  /** This handle's serving value with its served table advanced one
+    * generation by `f` ([[VectorDB.generation]]); unchanged for a
+    * handle without a served table. */
+  private def advanced(f: DataFrame => DataFrame): VectorDB.Serving =
+    state.table match {
+      case Some(p) => state.copy(table = Some(VectorDB.generation(Seq(p))(ls => f(ls.head))))
+      case None => state
+    }
+
+  /** `rows` mapped into the serving space (raw without an artifact). */
+  private def reduced(rows: DataFrame): DataFrame =
+    state.artifact.map(_.reduce(rows, vecCol)).getOrElse(rows)
 
   /** Append rows — the reference's `add_vector` ingest rule
     * (`src/lib.rs:62-72`, any bad row rejects the batch) applies
@@ -579,229 +372,126 @@ final class VectorDB private (
     * their sink of choice) — a rejected batch never mutates this
     * handle.
     *
-    * When this handle serves an HNSW index (and no compressed state),
-    * the derived handle carries the index MAINTAINED incrementally
+    * When this handle serves an HNSW index, the derived handle carries
+    * the index MAINTAINED incrementally
     * ([[graft.index.HnswIndex.addBatch]] — rebuild cost ∝ cells the
-    * batch touches, never the whole index): additions are routed
-    * through the trained router when one exists (the same id-hash rule
-    * as [[buildIndex]] otherwise), unit-normalized first under the
-    * cosine metric, and must carry the build-time payload columns.
-    * Compressed (PQ/SQ) handles carry their codes MAINTAINED too: the
-    * batch encodes with the existing model and appends cell-assigned
-    * codes rows — the resident codes never re-encode — so one appended
-    * row keeps ADC serving instead of degrading to brute force.
+    * batch touches, never the whole index): additions are reduced into
+    * the serving space and routed through the serving router when one
+    * exists (the same id-hash rule as [[buildIndex]] otherwise), and
+    * must carry the build-time payload columns. Compressed handles
+    * carry their codes MAINTAINED too: the batch encodes with the
+    * existing artifact and appends cell-assigned codes rows — the
+    * resident codes never re-encode. A batch that leaves the trained
+    * geometry (a dot batch above the trained max norm, an SQ batch
+    * outside the trained bounds) rebuilds the serving state over the
+    * grown corpus with the recorded build shape instead.
     *
-    * SUPERSESSION: the derived handle supersedes this one — the
-    * parent's cached index/codes generation is RELEASED when the child
-    * materializes (one live generation per churn chain, never the
-    * history). A parent handle kept alive afterwards (e.g. A/B serving
-    * during a migration) stays correct but recomputes its build
-    * lineage on the next search; keep serving from the newest handle,
-    * or re-persist the parent's state explicitly if both generations
-    * must serve concurrently. Applies to [[add]], [[remove]],
-    * [[upsert]], and [[compact]]. */
+    * SUPERSESSION: the derived handle supersedes this one. Its table is
+    * computed from this handle's cached rows, persisted and
+    * materialized, and then this handle's cached generation is
+    * RELEASED — one live generation per churn chain, never the
+    * history. The derived plan reads the parent through a leaf over
+    * its cached RDD, so plan size stays constant along a chain. A
+    * parent handle kept alive afterwards (e.g. A/B serving during a
+    * migration) stays correct but recomputes its build lineage on the
+    * next search; keep serving from the newest handle, or re-persist
+    * the parent's state explicitly if both generations must serve
+    * concurrently. Applies to [[add]], [[remove]], [[upsert]],
+    * [[compact]], [[rebalance]], [[splitCells]] and the merges. */
   def add(newRows: DataFrame): VectorDB = {
-    val keep = (Seq(idCol, vecCol) ++ servedPayloadCols).map(col)
-    val db = tuned(new VectorDB(raw.select(keep: _*)
-      .unionByName(newRows.select(keep: _*)), dims, params, idCol, vecCol))
-    val servesDot = intendedMetric == Knn.Dot &&
-      (index.isDefined || servesCompressed)
-    if (servesDot) {
-      val m2 = mipsMaxNormSq.getOrElse(
-        throw new IllegalStateException("dot index without its captured max norm"))
-      // nullable read: an EMPTY batch aggregates max to null, and a
-      // no-op add must neither NPE nor trigger a rebuild
-      val bRow = newRows.agg(max(dotNative(col(vecCol), col(vecCol)))).head()
-      val batchM2 =
-        if (bRow.isNullAt(0)) Double.NegativeInfinity else bRow.getDouble(0)
-      if (batchM2 > m2) {
-        // norm-expanding add: every existing extension references the
-        // build-time M, so the augmentation geometry is global — a
-        // batch that raises the max norm rebuilds the dot serving
-        // state under the new M (replaying the RECORDED build shape —
-        // cell count, iteration budget, codebook shape — not library
-        // defaults) instead of maintaining incrementally (clamping
-        // instead would bury the new vectors in augmented space)
-        rebuildOnto(db)
-        return db
+    val s = state
+    val keep = (Seq(idCol, vecCol) ++ s.payloadCols).map(col)
+    val corpus = raw.select(keep: _*).unionByName(newRows.select(keep: _*))
+    if (s.table.isDefined && s.artifact.exists(expands(_, newRows)))
+      return rebuilt(corpus)
+    derive(corpus, advanced { p =>
+      val src = reduced(newRows.select(keep: _*))
+      if (servesCompressed)
+        p.unionByName(IvfIndex.assign(src, s.router.get, idCol, vecCol)
+          .select(col(idCol), col("cell"), s.artifact.get.encodeExpr(col(vecCol)).as("codes"),
+            payExpr(s.payloadCols).as("payload")))
+      else {
+        val parted = s.router match {
+          case Some(m) => IvfIndex.assign(src, m, idCol, vecCol)
+            .withColumn("part", col("cell"))
+          case None =>
+            // buildIndex's id-hash rule at the index's own cell count
+            // (one tiny agg over the cached index, no corpus job)
+            val nParts = p.agg(max("part")).head().getInt(0) + 1
+            src.withColumn("part", pmod(hash(col(idCol)), lit(nParts)))
+        }
+        HnswIndex.addBatch(VectorDB.indexRows(p), parted, params, idCol, vecCol, "part",
+          s.payloadCols).toDF()
       }
+    })
+  }
+
+  /** True when `newRows` leaves `t`'s trained geometry: a dot batch
+    * whose max squared norm exceeds the trained one (every stored
+    * augmentation references it, and clamping would bury the new
+    * vectors in augmented space), or an SQ batch with a component
+    * outside the trained per-dim bounds in serving space (clamped
+    * codes would bias its ADC distances toward the interior). One
+    * small aggregate over the BATCH per check. */
+  private def expands(t: graft.index.SharedTraining, newRows: DataFrame): Boolean = {
+    // nullable reads: an EMPTY batch aggregates max to null, and a
+    // no-op add must neither NPE nor trigger a rebuild
+    val normGrows = t.metric == Knn.Dot && {
+      val m2 = t.maxNormSq
+      val row = newRows.agg(max(dotNative(col(vecCol), col(vecCol)))).head()
+      !row.isNullAt(0) && row.getDouble(0) > m2
     }
-    if (sqState.isDefined) {
-      // SQ codes clamp to the build-time per-dim bounds, so a batch
-      // with any component outside [lo, hi] would append codes whose
-      // ADC distances are silently biased toward the interior. Detect
-      // bound expansion (one small aggregate over the BATCH, reduced
-      // into serving space — the space the bounds were trained in) and
-      // take the rebuild arm under the recorded build shape instead —
-      // the exact analog of the dot norm-expansion check above.
-      val (_, lo, hi) = sqState.get
+    normGrows || t.sqBounds.exists { case (lo, hi) =>
       val vd = col(vecCol).cast("array<double>")
       val oob =
         exists(zip_with(vd, typedLit(lo), (x, l) => x < l), b => b) ||
           exists(zip_with(vd, typedLit(hi), (x, h) => x > h), b => b)
-      val row = reduceRows(newRows.select(col(idCol), col(vecCol)))
+      val row = t.reduce(newRows.select(col(idCol), col(vecCol)), vecCol)
         .agg(max(when(oob, 1).otherwise(0))).head()
-      if (!row.isNullAt(0) && row.getInt(0) == 1) {
-        rebuildOnto(db)
-        return db
-      }
-    }
-    if (servesCompressed)
-      return maintainedCodes(db, codesTable.unionByName(encodeBatch(newRows)))
-    maintained(db) { idx =>
-      val src = indexMetric match {
-        case Knn.Cosine => newRows.withColumn(vecCol, l2Normalize(col(vecCol)))
-        // augment with the BUILD-time max norm: the graph's geometry is
-        // fixed at build; re-deriving M from the batch would shear it
-        case Knn.Dot => newRows.withColumn(vecCol,
-          mipsAugment(col(vecCol), mipsMaxNormSq.getOrElse(
-            throw new IllegalStateException("dot index without its captured max norm"))))
-        case _ => newRows
-      }
-      val parted = ivfModel match {
-        case Some(m) => IvfIndex.assign(src, m, idCol, vecCol)
-          .withColumn("part", col("cell"))
-        case None =>
-          // mirror buildIndex's id-hash rule at the index's own cell
-          // count (one tiny agg over the persisted index, no corpus job)
-          val nParts = idx.agg(max("part")).head().getInt(0) + 1
-          src.withColumn("part", pmod(hash(col(idCol)), lit(nParts)))
-      }
-      HnswIndex.addBatch(idx, parted, params, idCol, vecCol, "part", servedPayloadCols)
+      !row.isNullAt(0) && row.getInt(0) == 1
     }
   }
 
-  /** Replay this handle's RECORDED build configuration onto a derived
-    * handle (the rebuild arm of norm-expanding dot adds): same cell
-    * count, iteration budget, codebook shape, metric, and payload
-    * columns the user chose. The rebuild reads only the derived
-    * corpus, so the parent's superseded cache releases immediately. */
-  private def rebuildOnto(db: VectorDB): Unit = {
-    if (sharedTraining.isDefined)
-      // a norm-/bound-expanding batch invalidates GLOBAL geometry: a
-      // shard that locally retrained would stop fingerprint-matching
-      // its peers and silently lose mergeability — fail loudly with
-      // the real fix instead
+  /** The rebuild arm of [[add]]: a handle over `corpus` trained afresh
+    * with this handle's mode, metric, payload columns and RECORDED
+    * build shape. The rebuild reads only the grown corpus, so this
+    * handle's cached generation releases at once. */
+  private def rebuilt(corpus: DataFrame): VectorDB = {
+    val s = state
+    val t = s.artifact.get
+    if (s.shared)
+      // a bound-expanding batch invalidates GLOBAL geometry: a shard
+      // that locally retrained would stop fingerprint-matching its
+      // peers and silently lose mergeability — fail loudly with the
+      // real fix instead
       throw new IllegalStateException(
         "this handle serves a corpus-global SharedTraining artifact and the " +
           "batch expands its trained bound (max-norm / SQ range) — a shard " +
           "cannot locally rebuild global geometry; retrain SharedTraining " +
           "over the grown corpus (or with a dominating normBoundSq) and " +
           "buildIndexShared every shard against the new artifact")
-    if (opqPerm.isDefined && pqState.isDefined) {
-      // the permutation is corpus-trained state: a rebuild re-derives
-      // it from the NEW corpus under the recorded shape
-      val (nc, ri, ns, ck, pi) = opqBuildParams.getOrElse((16, 1, 8, 16, 0))
-      db.buildIndexOpq(nc, ri, ns, ck, pi, metric = intendedMetric,
-        payloadCols = servedPayloadCols)
-    } else if (pqState.isDefined) {
-      val (nc, ri, ns, ck, pi) = pqBuildParams.getOrElse((16, 1, 8, 16, 0))
-      db.buildIndexPq(nc, ri, ns, ck, pi, metric = intendedMetric,
-        payloadCols = servedPayloadCols)
-    } else if (sqState.isDefined) {
-      val (nc, ri) = sqBuildParams.getOrElse((16, 1))
-      db.buildIndexSq(nc, ri, metric = intendedMetric,
-        payloadCols = servedPayloadCols)
-    } else if (bqState.isDefined) {
-      val (nc, ri) = bqBuildParams.getOrElse((16, 1))
-      db.buildIndexBq(nc, ri, metric = intendedMetric,
-        payloadCols = servedPayloadCols)
-    } else {
-      val (nc, it) = ivfBuildParams.getOrElse((ivfModel.map(_.k).getOrElse(16), 1))
-      db.buildIndexIvf(nc, it, metric = intendedMetric,
-        payloadCols = servedPayloadCols)
-    }
-    index.foreach(_.unpersist(blocking = false))
-    pqState.foreach(_._1.unpersist(blocking = false))
-    sqState.foreach(_._1.unpersist(blocking = false))
-    bqState.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Encode an incoming batch with the EXISTING compressed model:
-    * reduce into the index's serving space, route through the trained
-    * router, emit codes rows in the served schema. Only the batch
-    * encodes — the resident codes pass through [[maintainedCodes]]
-    * untouched (the dirty-work-only contract
-    * [[graft.index.HnswIndex.addBatch]] keeps for graphs). */
-  /** Rows mapped into the index's serving space with the STORED
-    * reduction state (build-time max norm for dot — never recaptured;
-    * a batch-derived M would shear the augmentation geometry). */
-  private def reduceRows(rows: DataFrame): DataFrame = {
-    val r = indexMetric match {
-      case Knn.Cosine => rows.withColumn(vecCol, l2Normalize(col(vecCol)))
-      case Knn.Dot => rows.withColumn(vecCol,
-        zeroPad(mipsAugment(col(vecCol), mipsMaxNormSq.getOrElse(
-          throw new IllegalStateException("dot codes without their captured max norm"))),
-          codesWidth, dims + 1))
-      case _ => rows
-    }
-    // OPQ: incoming batches encode in the permuted space (mirror of
-    // [[reduceQueryVec]]'s query-side hook)
-    opqPerm.map(p =>
-      r.withColumn(vecCol, graft.index.Opq.permuteExpr(col(vecCol), p)))
-      .getOrElse(r)
-  }
-
-  private def encodeBatch(newRows: DataFrame): DataFrame = {
-    val keep = (Seq(idCol, vecCol) ++ servedPayloadCols).map(col)
-    // build-time max norm on the dot arm: norm-expanding batches take
-    // the rebuild arm in [[add]] before reaching here
-    val reduced = reduceRows(newRows.select(keep: _*))
-    val router = ivfModel.getOrElse(throw new IllegalStateException(
-      "compressed serving requires the trained router"))
-    val enc = pqState
-      .map { case (_, m) => ProductQuantizer.encodeExpr(col(vecCol), m) }
-      .orElse(sqState.map { case (_, lo, hi) =>
-        ScalarQuantizer.encodeExpr(col(vecCol), lo, hi) })
-      .orElse(bqState.map { _ =>
-        graft.index.BinaryQuant.packExpr(col(vecCol), codesWidth) })
-      .get
-    IvfIndex.assign(reduced, router, idCol, vecCol)
-      .select(col(idCol), col("cell"), enc.as("codes"),
-        payExpr(servedPayloadCols).as("payload"))
-  }
-
-  /** Carry this handle's compressed serving state onto a derived
-    * handle with `newCodes` as its codes table: the new generation
-    * persists and MATERIALIZES, then the superseded codes release — a
-    * churn chain pins one live generation, never the whole history.
-    * Same supersession contract as [[maintained]]: the PARENT handle's
-    * cache is released; see the note on [[add]]. */
-  private def maintainedCodes(db: VectorDB, newCodes: DataFrame): VectorDB = {
-    val next = newCodes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    next.count()
-    codesTable.unpersist(blocking = false)
-    db.pqState = pqState.map { case (_, m) => (next, m) }
-    db.sqState = sqState.map { case (_, lo, hi) => (next, lo, hi) }
-    db.bqState = bqState.map(_ => next)
-    db.indexMetric = indexMetric
-    db.ivfModel = ivfModel
-    db.mipsMaxNormSq = mipsMaxNormSq
-    db.opqPerm = opqPerm
-    // in-bound maintenance encodes against the shared artifact, so the
-    // derived handle keeps its merge compatibility
-    db.sharedTraining = sharedTraining
+    val db = derive(corpus, VectorDB.Serving(s.metric, payloadCols = s.payloadCols))
+    db.trained(t.mode, s.metric, s.shape.getOrElse(VectorDB.BuildShape(
+      if (t.compressed) 16 else s.router.map(_.k).getOrElse(16), 1)), s.payloadCols)
+    s.table.foreach(_.unpersist(blocking = false))
     db
   }
 
   /** Remove rows by id (extension — the reference is append-only): the
     * removal set is small by contract and broadcasts into an anti-join,
     * so the lineage stays one narrow pass over the table. When this
-    * handle serves an HNSW index (and no compressed state), the derived
-    * handle carries the index maintained incrementally
-    * ([[graft.index.HnswIndex.removeBatch]] — only cells that held a
-    * removed id rebuild); compressed (PQ/SQ) handles carry their codes
-    * pruned by the same anti-join; otherwise it derives index-less.
-    * Absent ids are a no-op, mirroring `removeBatch`'s idempotence. */
+    * handle serves an HNSW index, the derived handle carries the index
+    * maintained incrementally ([[graft.index.HnswIndex.removeBatch]] —
+    * only cells that held a removed id rebuild); compressed handles
+    * carry their codes pruned by the same anti-join; otherwise it
+    * derives index-less. Absent ids are a no-op, mirroring
+    * `removeBatch`'s idempotence. Supersedes this handle (see [[add]]). */
   def remove(ids: DataFrame): VectorDB = {
-    val db = tuned(new VectorDB(
-      raw.join(broadcast(ids.select(col(idCol))), Seq(idCol), "left_anti"),
-      dims, params, idCol, vecCol))
-    if (servesCompressed)
-      return maintainedCodes(db, codesTable
-        .join(broadcast(ids.select(col(idCol))), Seq(idCol), "left_anti"))
-    maintained(db)(idx => HnswIndex.removeBatch(idx, ids, params, idCol))
+    val gone = broadcast(ids.select(col(idCol)))
+    derive(raw.join(gone, Seq(idCol), "left_anti"), advanced { p =>
+      if (servesCompressed) p.join(gone, Seq(idCol), "left_anti")
+      else HnswIndex.removeBatch(VectorDB.indexRows(p), ids, params, idCol).toDF()
+    })
   }
 
   /** Replace-or-insert by id (extension — training pipelines re-embed
@@ -811,6 +501,11 @@ final class VectorDB private (
     * the cells the batch touches, never the corpus. */
   def upsert(rows: DataFrame): VectorDB =
     remove(rows.select(col(idCol))).add(rows)
+
+  /** The router re-derived from a served index layout: each cell
+    * routes by the exact decimal mean of its rows. */
+  private def meansRouter(idx: DataFrame): IvfIndex.Model =
+    IvfIndex.fromPartitionMeans(idx.select(col("part"), col("vec")), "part", "vec")
 
   /** Consolidate the served index's undersized cells
     * ([[graft.index.HnswIndex.compact]] — the defrag a long-lived
@@ -829,22 +524,12 @@ final class VectorDB private (
     * compacting, or compact the merged result). */
   def compact(minCellSize: Int = 64): VectorDB = {
     if (servesCompressed) return compactCodes(minCellSize)
-    val idx = index.getOrElse(throw new IllegalStateException(
-      "compact requires a built index — call buildIndex/buildIndexIvf/buildIndexPq/buildIndexSq first"))
-    val compacted = HnswIndex.compact(idx, params, minCellSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the compacted generation, then release the
-    // superseded one — a defrag must shrink the cache, not double it
-    compacted.count()
-    idx.unpersist(blocking = false)
-    val db = tuned(new VectorDB(raw, dims, params, idCol, vecCol))
-    db.sourcePath = sourcePath
-    db.index = Some(compacted)
-    db.indexMetric = indexMetric
-    db.mipsMaxNormSq = mipsMaxNormSq
-    db.ivfModel = ivfModel.map(_ => IvfIndex.fromPartitionMeans(
-      compacted.toDF().select(col("part"), col("vec")), "part", "vec"))
-    db
+    if (index.isEmpty) throw new IllegalStateException(
+      "compact requires a built index — call buildIndex/buildIndexIvf/buildIndexPq/buildIndexSq first")
+    val next = advanced(p =>
+      HnswIndex.compact(VectorDB.indexRows(p), params, minCellSize).toDF())
+    derive(raw, next.copy(shared = false,
+      router = next.router.map(_ => meansRouter(next.table.get))))
   }
 
   /** Split oversized serving cells into first-class cells through the
@@ -860,22 +545,12 @@ final class VectorDB private (
     * layout diverges from the artifact's router) — merge first, then
     * rebalance the merged result. */
   def rebalance(maxCellSize: Int = HnswIndex.DefaultMaxCellSize): VectorDB = {
-    val idx = index.getOrElse(throw new IllegalStateException(
-      "rebalance requires a built HNSW index — call buildIndex/buildIndexIvf first"))
-    val rebal = HnswIndex.rebalance(idx, params, maxCellSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the rebalanced generation, then release the
-    // superseded one (the compact()/maintained() cache contract)
-    rebal.count()
-    idx.unpersist(blocking = false)
-    val db = tuned(new VectorDB(raw, dims, params, idCol, vecCol))
-    db.sourcePath = sourcePath
-    db.index = Some(rebal)
-    db.indexMetric = indexMetric
-    db.mipsMaxNormSq = mipsMaxNormSq
-    db.ivfModel = ivfModel.map(_ => IvfIndex.fromPartitionMeans(
-      rebal.toDF().select(col("part"), col("vec")), "part", "vec"))
-    db
+    if (index.isEmpty) throw new IllegalStateException(
+      "rebalance requires a built HNSW index — call buildIndex/buildIndexIvf first")
+    val next = advanced(p =>
+      HnswIndex.rebalance(VectorDB.indexRows(p), params, maxCellSize).toDF())
+    derive(raw, next.copy(shared = false,
+      router = next.router.map(_ => meansRouter(next.table.get))))
   }
 
   /** Merge another INDEPENDENTLY BUILT handle into one serving handle
@@ -892,81 +567,18 @@ final class VectorDB private (
     * every stored vector — shard-local versions of either cannot be
     * reconciled without a rebuild, so those merges are rejected
     * loudly rather than served subtly wrong. */
-  def mergeWith(other: VectorDB): VectorDB = {
-    require(dims == other.dims,
-      s"dimension mismatch: $dims vs ${other.dims}")
-    require(idCol == other.idCol && vecCol == other.vecCol,
-      s"column-name mismatch: ($idCol, $vecCol) vs (${other.idCol}, ${other.vecCol})")
-    require(params == other.params,
-      s"HNSW parameter mismatch: $params vs ${other.params}")
-    // the SHARED-ARTIFACT arm: both sides encoded against the same
-    // corpus-global training ([[buildIndexShared]]) — every mode
-    // merges, including compressed and dot. A fingerprint MISMATCH
-    // between two shared handles fails here with the real diagnosis
-    // instead of falling through to the shard-local reject below.
-    (sharedTraining, other.sharedTraining) match {
-      case (Some(ta), Some(tb)) =>
-        require(ta.fingerprint == tb.fingerprint,
-          "shared-training fingerprint mismatch: the two handles were " +
-            s"encoded against different artifacts (${ta.fingerprint.take(12)}… " +
-            s"vs ${tb.fingerprint.take(12)}…) — retrain once and " +
-            "buildIndexShared both sides from the SAME artifact")
-        return mergeShared(ta, Seq(other))
-      case _ => ()
-    }
-    // compressed state rejects BEFORE the index requirement: a PQ/SQ/BQ
-    // handle has no HNSW index at all, and "build an index first" would
-    // misdirect a user whose real blocker is the corpus-global codebook
-    require(pqState.isEmpty && sqState.isEmpty && bqState.isEmpty &&
-      other.pqState.isEmpty && other.sqState.isEmpty && other.bqState.isEmpty,
-      "compressed handles with shard-local training merge by REBUILD — " +
-        "PQ/SQ/BQ/OPQ codebooks and bounds are corpus-global, two " +
-        "shard-local trainings cannot reconcile; train once with " +
-        "SharedTraining.train and buildIndexShared each shard to make " +
-        "compressed shards mergeable")
-    val a = index.getOrElse(throw new IllegalStateException(
-      "mergeWith requires a built HNSW index on BOTH handles"))
-    val b = other.index.getOrElse(throw new IllegalStateException(
-      "mergeWith requires a built HNSW index on BOTH handles"))
-    require(indexMetric == other.indexMetric && intendedMetric == other.intendedMetric,
-      s"metric mismatch: $indexMetric/$intendedMetric vs " +
-        s"${other.indexMetric}/${other.intendedMetric}")
-    require(indexMetric != Knn.Dot,
-      "dot (MIPS) handles with shard-local training merge by REBUILD — " +
-        "the augmentation max-norm is corpus-global and each shard baked " +
-        "its own into the stored vectors; train once with " +
-        "SharedTraining.train(metric = dot) and buildIndexShared each " +
-        "shard to make dot shards mergeable")
-    require(servedPayloadCols == other.servedPayloadCols,
-      s"payload-column mismatch: $servedPayloadCols vs ${other.servedPayloadCols}")
-    require(vectors.columns.sorted.sameElements(other.vectors.columns.sorted),
-      s"corpus schema mismatch: ${vectors.columns.sorted.mkString(",")} vs " +
-        s"${other.vectors.columns.sorted.mkString(",")}")
-    // HnswIndex.merge persists the union BEFORE its duplicate-id
-    // aggregate (one computation serves the check and this
-    // materialization); the count just completes the cache fill
-    val merged = HnswIndex.merge(a, b)
-    merged.count()
-    val db = tuned(new VectorDB(
-      vectors.unionByName(other.vectors), dims, params, idCol, vecCol))
-    db.index = Some(merged)
-    db.indexMetric = indexMetric
-    db.ivfModel = ivfModel.orElse(other.ivfModel).map(_ =>
-      IvfIndex.fromPartitionMeans(
-        merged.toDF().select(col("part"), col("vec")), "part", "vec"))
-    db
-  }
+  def mergeWith(other: VectorDB): VectorDB = mergeAllWith(Seq(other))
 
-  /** The fingerprint-equal arm of [[mergeWith]]: both handles encoded
+  /** The fingerprint-equal arm of [[mergeAllWith]]: every handle encoded
     * against the SAME [[graft.index.SharedTraining]] artifact, so
     * corpus-global state reconciles by construction. Compressed codes
     * tables union DIRECTLY — cell ids are global (both sides routed
     * through the shared centroids), so nothing re-keys and the SHARED
     * router keeps serving. The HNSW ("ivf") mode still merges via
-    * [[graft.index.HnswIndex.merge]] with re-keyed parts — cell GRAPHS
-    * are shard-local even under a shared router (interleaving two
-    * graphs under one part id would corrupt both) — and re-derives its
-    * router from the merged layout; the shared dot max-norm is what
+    * [[graft.index.HnswIndex.mergeAll]] with re-keyed parts — cell
+    * GRAPHS are shard-local even under a shared router (interleaving
+    * two graphs under one part id would corrupt both) — and re-derives
+    * its router from the merged layout; the shared dot max-norm is what
     * makes the dot variant sound. Id-disjointness is checked loudly on
     * the compressed union (the HnswIndex.merge contract; the HNSW arm
     * checks inside merge). Merged serving state ≡ a single
@@ -976,53 +588,57 @@ final class VectorDB private (
     * q_vectordb_dot_merged oracles gate. */
   private def mergeShared(t: graft.index.SharedTraining,
       others: Seq[VectorDB]): VectorDB = {
-    others.foreach { other =>
-      require(servedPayloadCols == other.servedPayloadCols,
-        s"payload-column mismatch: $servedPayloadCols vs ${other.servedPayloadCols}")
-      require(vectors.columns.sorted.sameElements(other.vectors.columns.sorted),
-        s"corpus schema mismatch: ${vectors.columns.sorted.mkString(",")} vs " +
-          s"${other.vectors.columns.sorted.mkString(",")}")
-    }
+    others.foreach(requireSameCorpus)
     val all = this +: others
-    val db = tuned(new VectorDB(
-      all.map(_.vectors).reduce(_ unionByName _), dims, params, idCol, vecCol))
-    db.indexMetric = indexMetric
-    db.intendedMetric = intendedMetric
-    db.mipsMaxNormSq = t.mipsMaxNormSq
-    db.opqPerm = t.opqPerm
-    db.sharedTraining = Some(t)
+    val corpus = all.map(_.vectors).reduce(_ unionByName _)
     if (servesCompressed) {
-      // persist BEFORE the duplicate-id aggregate: one computation
-      // serves the check and the merged handle's first search
-      val union = all.map(_.codesTable).reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // rejection must unpersist the blocks the duplicate-id aggregate
-      // just materialized (the HnswIndex.merge error-path contract)
-      try {
-        val dup = union.groupBy(col(idCol)).count()
-          .filter(col("count") > 1).select(col(idCol)).head(1)
-        require(dup.isEmpty,
-          s"merge requires globally unique vector ids; id " +
-            s"${dup.headOption.map(_.get(0)).getOrElse(-1L)} appears in more " +
-            "than one shard (shard the corpus disjointly, or remove/upsert " +
-            "before merging)")
-      } catch {
-        case e: Throwable => union.unpersist(); throw e
+      val union = VectorDB.generation(all.map(_.state.table.get)) { ls =>
+        // persist BEFORE the duplicate-id aggregate: one computation
+        // serves the check and the generation's materialization
+        val u = ls.reduce(_ unionByName _)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // rejection must unpersist the blocks the duplicate-id
+        // aggregate just materialized (the HnswIndex.merge contract)
+        try {
+          val dup = u.groupBy(col(idCol)).count()
+            .filter(col("count") > 1).select(col(idCol)).head(1)
+          require(dup.isEmpty,
+            s"merge requires globally unique vector ids; id " +
+              s"${dup.headOption.map(_.get(0)).getOrElse(-1L)} appears in more " +
+              "than one shard (shard the corpus disjointly, or remove/upsert " +
+              "before merging)")
+        } catch {
+          case e: Throwable => u.unpersist(); throw e
+        }
+        u
       }
-      db.pqState = pqState.map { case (_, m) => (union, m) }
-      db.sqState = sqState.map { case (_, lo, hi) => (union, lo, hi) }
-      db.bqState = bqState.map(_ => union)
-      db.ivfModel = Some(t.router)
+      derive(corpus, state.copy(artifact = Some(t), shared = true,
+        router = Some(t.router), table = Some(union)))
     } else {
-      val idxs = all.map(_.index.getOrElse(throw new IllegalStateException(
-        "mergeWith requires a built HNSW index on EVERY handle")))
-      val merged = HnswIndex.mergeAll(idxs)
-      merged.count()
-      db.index = Some(merged)
-      db.ivfModel = Some(IvfIndex.fromPartitionMeans(
-        merged.toDF().select(col("part"), col("vec")), "part", "vec"))
+      val merged = mergedIndex(all)
+      derive(corpus, state.copy(artifact = Some(t), shared = true,
+        router = Some(meansRouter(merged)), table = Some(merged)))
     }
-    db
+  }
+
+  /** The union of `all` handles' index rows as one generation
+    * ([[graft.index.HnswIndex.mergeAll]]: part ids re-keyed, one
+    * duplicate-id check). */
+  private def mergedIndex(all: Seq[VectorDB]): DataFrame = {
+    if (!all.forall(_.index.isDefined)) throw new IllegalStateException(
+      "mergeWith requires a built HNSW index on EVERY handle")
+    VectorDB.generation(all.map(_.state.table.get)) { ls =>
+      HnswIndex.mergeAll(ls.map(VectorDB.indexRows)).toDF()
+    }
+  }
+
+  /** Payload columns and corpus schema must agree across merged handles. */
+  private def requireSameCorpus(o: VectorDB): Unit = {
+    require(state.payloadCols == o.state.payloadCols,
+      s"payload-column mismatch: ${state.payloadCols} vs ${o.state.payloadCols}")
+    require(vectors.columns.sorted.sameElements(o.vectors.columns.sorted),
+      s"corpus schema mismatch: ${vectors.columns.sorted.mkString(",")} vs " +
+        s"${o.vectors.columns.sorted.mkString(",")}")
   }
 
   /** N-way [[mergeWith]] — the form a hundreds-of-shards build
@@ -1047,48 +663,48 @@ final class VectorDB private (
         s"HNSW parameter mismatch: $params vs ${o.params}")
     }
     val all = this +: others
-    val shared = all.map(_.sharedTraining)
+    // the SHARED-ARTIFACT arm: every side encoded against the same
+    // corpus-global training ([[buildIndexShared]]) — every mode
+    // merges, including compressed and dot. A fingerprint MISMATCH
+    // fails here with the real diagnosis instead of falling through
+    // to the shard-local rejects below.
+    val shared = all.map(h => h.state.artifact.filter(_ => h.state.shared))
     if (shared.exists(_.isDefined)) {
       require(shared.forall(_.isDefined),
         "mixed shared-artifact and shard-local-trained handles cannot " +
           "merge — buildIndexShared EVERY shard from the same artifact")
       val fps = shared.flatten.map(_.fingerprint).distinct
       require(fps.size == 1,
-        "shared-training fingerprint mismatch across shards " +
-          s"(${fps.map(_.take(12)).mkString("…, ")}…) — retrain once and " +
-          "buildIndexShared every shard from the SAME artifact")
+        "shared-training fingerprint mismatch: the handles were encoded " +
+          s"against different artifacts (${fps.map(_.take(12)).mkString("…, ")}…) — " +
+          "retrain once and buildIndexShared every shard from the SAME artifact")
       return mergeShared(shared.head.get, others)
     }
-    require(all.forall(h => h.pqState.isEmpty && h.sqState.isEmpty && h.bqState.isEmpty),
+    // compressed state rejects BEFORE the index requirement: a PQ/SQ/BQ
+    // handle has no HNSW index at all, and "build an index first" would
+    // misdirect a user whose real blocker is the corpus-global codebook
+    require(!all.exists(_.servesCompressed),
       "compressed handles with shard-local training merge by REBUILD — " +
-        "train once with SharedTraining.train and buildIndexShared each " +
-        "shard to make compressed shards mergeable")
-    val idxs = all.map(_.index.getOrElse(throw new IllegalStateException(
-      "mergeAllWith requires a built HNSW index on EVERY handle")))
+        "PQ/SQ/BQ/OPQ codebooks and bounds are corpus-global, two " +
+        "shard-local trainings cannot reconcile; train once with " +
+        "SharedTraining.train and buildIndexShared each shard to make " +
+        "compressed shards mergeable")
     others.foreach { o =>
-      require(indexMetric == o.indexMetric && intendedMetric == o.intendedMetric,
-        s"metric mismatch: $indexMetric/$intendedMetric vs " +
-          s"${o.indexMetric}/${o.intendedMetric}")
-      require(servedPayloadCols == o.servedPayloadCols,
-        s"payload-column mismatch: $servedPayloadCols vs ${o.servedPayloadCols}")
-      require(vectors.columns.sorted.sameElements(o.vectors.columns.sorted),
-        s"corpus schema mismatch: ${vectors.columns.sorted.mkString(",")} vs " +
-          s"${o.vectors.columns.sorted.mkString(",")}")
+      require(metric == o.metric, s"metric mismatch: $metric vs ${o.metric}")
+      requireSameCorpus(o)
     }
-    require(indexMetric != Knn.Dot,
+    require(metric != Knn.Dot,
       "dot (MIPS) handles with shard-local training merge by REBUILD — " +
-        "train once with SharedTraining.train(metric = dot) and " +
-        "buildIndexShared each shard to make dot shards mergeable")
-    val merged = HnswIndex.mergeAll(idxs)
-    merged.count()
-    val db = tuned(new VectorDB(
-      all.map(_.vectors).reduce(_ unionByName _), dims, params, idCol, vecCol))
-    db.index = Some(merged)
-    db.indexMetric = indexMetric
-    db.ivfModel = all.flatMap(_.ivfModel).headOption.map(_ =>
-      IvfIndex.fromPartitionMeans(
-        merged.toDF().select(col("part"), col("vec")), "part", "vec"))
-    db
+        "the augmentation max-norm is corpus-global and each shard baked " +
+        "its own into the stored vectors; train once with " +
+        "SharedTraining.train(metric = dot) and buildIndexShared each " +
+        "shard to make dot shards mergeable")
+    val merged = mergedIndex(all)
+    val routed = all.exists(_.state.router.isDefined)
+    derive(all.map(_.vectors).reduce(_ unionByName _), state.copy(
+      artifact = all.flatMap(_.state.artifact).headOption, shared = false,
+      router = if (routed) Some(meansRouter(merged)) else None,
+      table = Some(merged)))
   }
 
   /** Codes-table defrag — [[compact]]'s contract on the compressed
@@ -1103,9 +719,9 @@ final class VectorDB private (
     * reading the moved rows' raw vectors; no shuffle, no corpus-wide
     * reduction). */
   private def compactCodes(minCellSize: Int): VectorDB = {
-    val router = ivfModel.getOrElse(throw new IllegalStateException(
+    val router = state.router.getOrElse(throw new IllegalStateException(
       "compressed compaction requires the trained router"))
-    val counts = codesTable.groupBy("cell").count().collect()
+    val counts = state.table.get.groupBy("cell").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val small = counts.filter(_._2 < minCellSize).keys.toSet
     // empty codes table: nothing to dissolve AND nothing to receive —
@@ -1114,46 +730,29 @@ final class VectorDB private (
     if (counts.nonEmpty)
       require(counts.keySet.diff(small).nonEmpty,
         s"minCellSize=$minCellSize would dissolve every cell")
-    val db = tuned(new VectorDB(raw, dims, params, idCol, vecCol))
-    db.sourcePath = sourcePath
-    db.indexMetric = indexMetric
-    db.mipsMaxNormSq = mipsMaxNormSq
-    db.opqPerm = opqPerm
-    if (small.isEmpty) {
-      // nothing below threshold: the live generation carries over
-      db.pqState = pqState
-      db.sqState = sqState
-      db.bqState = bqState
-      db.ivfModel = ivfModel
-      return db
-    }
+    // nothing below threshold: the live generation carries over
+    if (small.isEmpty) return derive(raw, state)
     val survOrds = router.centroids.indices.filter(o => !small(router.cellId(o)))
     val survModel = IvfIndex.Model(
       survOrds.map(router.centroids).toArray,
       survOrds.map(router.cellId).toArray)
-    val movedCodes = codesTable
-      .filter(col("cell").isin(small.toSeq: _*))
-      .drop("cell")
-    // reduce + reassign ONLY the moved rows' raw vectors: the moved
-    // set BROADCASTS (small by the dissolve contract — the same bound
-    // remove() relies on) and the id-join narrows the corpus rows
-    // BEFORE the reduction map, so neither a corpus shuffle nor a
-    // corpus-wide dot augmentation happens — one corpus scan joined
-    // against a broadcast id set is the whole re-route cost
-    val reassigned = IvfIndex.assign(
-        reduceRows(vectors.select(col(idCol), col(vecCol))
-          .join(broadcast(movedCodes), Seq(idCol))),
-        survModel, idCol, vecCol)
-      .select(col(idCol), col("cell"), col("codes"), col("payload"))
-    val kept = codesTable.filter(!col("cell").isin(small.toSeq: _*))
-    val out = maintainedCodes(db, kept.unionByName(reassigned))
-    out.ivfModel = Some(survModel)
     // compaction restricts the router to the survivors — the layout
     // diverges from any SharedTraining artifact, so the derived handle
-    // drops its shared status (maintainedCodes carries it for IN-BOUND
-    // maintenance, which never touches the router)
-    out.sharedTraining = None
-    out
+    // drops its shared status
+    derive(raw, advanced { p =>
+      val movedCodes = p.filter(col("cell").isin(small.toSeq: _*)).drop("cell")
+      // reduce + reassign ONLY the moved rows' raw vectors: the moved
+      // set BROADCASTS (small by the dissolve contract — the same bound
+      // remove() relies on) and the id-join narrows the corpus rows
+      // BEFORE the reduction map, so neither a corpus shuffle nor a
+      // corpus-wide dot augmentation happens
+      val reassigned = IvfIndex.assign(
+          reduced(vectors.select(col(idCol), col(vecCol))
+            .join(broadcast(movedCodes), Seq(idCol))),
+          survModel, idCol, vecCol)
+        .select(col(idCol), col("cell"), col("codes"), col("payload"))
+      p.filter(!col("cell").isin(small.toSeq: _*)).unionByName(reassigned)
+    }.copy(router = Some(survModel), shared = false))
   }
 
   /** Split oversized serving cells on a COMPRESSED handle —
@@ -1186,41 +785,33 @@ final class VectorDB private (
     *
     * A [[buildIndexShared]] handle DROPS its shared status here (the
     * split router diverges from the artifact — merge every shard
-    * FIRST, then split the merged result). HNSW handles take
-    * [[rebalance]]. */
+    * FIRST, then split the merged result; call [[reshare]] on the split
+    * handle to mint a v2 artifact new shards can encode against). HNSW
+    * handles take [[rebalance]]. */
   def splitCells(maxCellSize: Int): VectorDB = {
     require(maxCellSize >= 1, s"maxCellSize must be >= 1, got $maxCellSize")
     require(servesCompressed,
       "splitCells maintains compressed codes tables — HNSW handles take rebalance()")
-    val router = ivfModel.getOrElse(throw new IllegalStateException(
+    val router = state.router.getOrElse(throw new IllegalStateException(
       "compressed cell split requires the trained router"))
-    val counts = codesTable.groupBy("cell").count().collect()
+    val codes = state.table.get
+    val counts = codes.groupBy("cell").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val big = counts.filter(_._2 > maxCellSize).keys.toSet
-    val db = tuned(new VectorDB(raw, dims, params, idCol, vecCol))
-    db.sourcePath = sourcePath
-    db.indexMetric = indexMetric
-    db.mipsMaxNormSq = mipsMaxNormSq
-    db.opqPerm = opqPerm
-    if (big.isEmpty) {
-      db.pqState = pqState
-      db.sqState = sqState
-      db.bqState = bqState
-      db.ivfModel = ivfModel
-      // a no-op split diverges NOTHING — router and codes are carried
-      // verbatim — so shared status (and with it merge compatibility)
-      // carries too; only an actual split drops it below
-      db.sharedTraining = sharedTraining
-      return db
-    }
+    // a no-op split diverges NOTHING — router and codes are carried
+    // verbatim — so shared status (and with it merge compatibility)
+    // carries too; only an actual split drops it below
+    if (big.isEmpty) return derive(raw, state)
     val spark = raw.sparkSession
     import spark.implicits._
     // the oversized cells' raw vectors, reduced into serving space:
     // one corpus scan joined to the big-cell membership on id (the
     // membership is NOT broadcast-sized — these are the fullest cells)
-    val members = reduceRows(vectors.select(col(idCol), col(vecCol)))
-      .join(codesTable.filter(col("cell").isin(big.toSeq: _*))
-        .select(col(idCol), col("cell")), Seq(idCol))
+    def membersOf(c: DataFrame): DataFrame =
+      reduced(vectors.select(col(idCol), col(vecCol)))
+        .join(c.filter(col("cell").isin(big.toSeq: _*))
+          .select(col(idCol), col("cell")), Seq(idCol))
+    val members = membersOf(codes)
     // seeds: the ceil(n/max) lowest-id members per big cell — one
     // bounded collect (Σ seeds = the new cell count, router-sized)
     val arity = big.toSeq.sorted
@@ -1243,7 +834,7 @@ final class VectorDB private (
       .toSeq.toDF("cell", "new_cell", "seed")
     // per-member argmin over ITS cell's seeds: broadcast fan-out join
     // + min(struct) — deterministic (distance, then lower new id)
-    val assigned = members
+    def assignedOf(m: DataFrame): DataFrame = m
       .join(broadcast(seedsDf), Seq("cell"))
       .select(col(idCol),
         struct(l2SqNative(col(vecCol), col("seed").cast("array<float>")).as("d"),
@@ -1251,34 +842,28 @@ final class VectorDB private (
       .groupBy(col(idCol))
       .agg(min(col("s")).as("m"))
       .select(col(idCol), col("m.nc").as("new_cell"))
-    val updated = codesTable.filter(col("cell").isin(big.toSeq: _*))
-      .drop("cell")
-      .join(assigned, Seq(idCol))
-      .select(col(idCol), col("new_cell").as("cell"), col("codes"), col("payload"))
-    val kept = codesTable.filter(!col("cell").isin(big.toSeq: _*))
-    val out = maintainedCodes(db, kept.unionByName(updated))
     // final router: survivors keep their trained centroids; each new
     // sub-cell routes by the exact decimal MEAN of its members
     val subModel = IvfIndex.fromPartitionMeans(
-      members.join(assigned, Seq(idCol)).select(col("new_cell"), col(vecCol)),
+      members.join(assignedOf(members), Seq(idCol)).select(col("new_cell"), col(vecCol)),
       "new_cell", vecCol)
     val survOrds = router.centroids.indices.filter(o => !big(router.cellId(o)))
     val combined = (survOrds.map(o => router.cellId(o) -> router.centroids(o)) ++
       subModel.centroids.indices.map(o => subModel.cellId(o) -> subModel.centroids(o)))
       .sortBy(_._1).toArray
-    out.ivfModel = Some(IvfIndex.Model(combined.map(_._2), combined.map(_._1)))
-    // the split router diverges from any SharedTraining artifact: the
-    // derived handle drops its shared status (merge shards FIRST, then
-    // split the merged result — the scaladoc contract); call
-    // [[reshare]] on the split handle to mint a v2 artifact new shards
-    // can encode against
-    out.sharedTraining = None
-    out
+    derive(raw, advanced { p =>
+      val updated = p.filter(col("cell").isin(big.toSeq: _*))
+        .drop("cell")
+        .join(assignedOf(membersOf(p)), Seq(idCol))
+        .select(col(idCol), col("new_cell").as("cell"), col("codes"), col("payload"))
+      p.filter(!col("cell").isin(big.toSeq: _*)).unionByName(updated)
+    }.copy(router = Some(IvfIndex.Model(combined.map(_._2), combined.map(_._1))),
+      shared = false))
   }
 
   /** Mint a v2 [[graft.index.SharedTraining]] artifact from THIS
     * handle's CURRENT serving state — the post-split lifecycle arm
-    * that un-dead-ends a rolling merge pipeline (VERDICT r16 item #3):
+    * that un-dead-ends a rolling merge pipeline:
     * [[splitCells]]/[[compactCodes]] drop shared status because their
     * router diverges from the trained artifact, so once split, a
     * handle could never accept another shard. But PQ/SQ/BQ codes are
@@ -1297,25 +882,14 @@ final class VectorDB private (
     require(servesCompressed,
       "reshare derives artifacts from compressed serving state — HNSW " +
         "handles merge via their own index rows and never dead-end on a split")
-    val router = ivfModel.getOrElse(throw new IllegalStateException(
+    val router = state.router.getOrElse(throw new IllegalStateException(
       "reshare requires the trained router"))
-    val mode =
-      if (pqState.isDefined && opqPerm.isDefined) "opq"
-      else if (pqState.isDefined) "pq"
-      else if (sqState.isDefined) "sq"
-      else "bq"
-    if (indexMetric == Knn.Dot)
-      require(mipsMaxNormSq.isDefined,
+    val a = state.artifact.get
+    if (a.metric == Knn.Dot)
+      require(a.mipsMaxNormSq.isDefined,
         "dot handle without its trained max norm cannot mint an artifact")
-    val numSub = pqState.map(_._2.numSub).getOrElse(1)
-    val t = graft.index.SharedTraining(
-      metric = indexMetric, mode = mode, dims = dims,
-      width = graft.index.SharedTraining.servingWidth(mode, indexMetric, dims, numSub),
-      router = router,
-      pqModel = pqState.map(_._2),
-      sqBounds = sqState.map { case (_, lo, hi) => (lo, hi) },
-      opqPerm = opqPerm, mipsMaxNormSq = mipsMaxNormSq)
-    sharedTraining = Some(t)
+    val t = a.copy(router = router)
+    state = state.copy(artifact = Some(t), shared = true)
     t
   }
 
@@ -1329,23 +903,17 @@ final class VectorDB private (
     val spark = raw.sparkSession
     import spark.implicits._
     val serving =
-      if (opqPerm.isDefined && pqState.isDefined) "opq"
-      else if (pqState.isDefined) "pq"
-      else if (sqState.isDefined) "sq"
-      else if (bqState.isDefined) "bq"
+      if (servesCompressed) state.artifact.get.mode
       else if (index.isDefined) "hnsw"
       else "exact"
-    val cellCounts: Array[Long] =
-      if (index.isDefined)
-        index.get.groupBy("part").count().collect().map(_.getLong(1))
-      else if (servesCompressed)
-        codesTable.groupBy("cell").count().collect().map(_.getLong(1))
-      else Array.empty
-    Seq((len, dims, serving, intendedMetric, cellCounts.length.toLong,
+    val cellCounts: Array[Long] = state.table
+      .map(_.groupBy(if (servesCompressed) "cell" else "part").count().collect().map(_.getLong(1)))
+      .getOrElse(Array.empty)
+    Seq((len, dims, serving, metric, cellCounts.length.toLong,
         cellCounts.sum,
         if (cellCounts.isEmpty) 0L else cellCounts.min,
         if (cellCounts.isEmpty) 0L else cellCounts.max,
-        ivfModel.isDefined))
+        state.router.isDefined))
       .toDF("n_vectors", "dims", "serving", "metric", "n_cells",
         "n_indexed", "min_cell", "max_cell", "has_router")
   }
@@ -1359,7 +927,7 @@ final class VectorDB private (
     * at any scale, so every handle serves it from the corpus. Result:
     * (idCol, dist) ascending with an id tiebreak. */
   def searchRange(queryVec: Seq[Float], radius: Double): DataFrame = {
-    val d = intendedMetric match {
+    val d = metric match {
       case Knn.Cosine => lit(1.0d) - cosineNative(col(vecCol), vecLit(queryVec))
       // dot serves dist = −dot: pass radius = −minDot for "dot ≥ minDot"
       case Knn.Dot => -dotNative(col(vecCol), vecLit(queryVec))
@@ -1368,56 +936,6 @@ final class VectorDB private (
     vectors.select(col(idCol), d.as("dist"))
       .filter(col("dist") <= radius)
       .orderBy(col("dist").asc, col(idCol).asc)
-  }
-
-  /** Carries this handle's index — incrementally updated by `f` — onto
-    * a derived handle, together with the serving state the index arm
-    * needs (metric, router). The new generation persists and
-    * MATERIALIZES (its lineage reads the old one), then the superseded
-    * generation releases — without this every add/remove in a churn
-    * chain pins another dead index at MEMORY_AND_DISK. No-op for
-    * index-less and compressed handles.
-    *
-    * Supersession contract: the PARENT's cached generation is released
-    * here — the derived handle supersedes it (see the note on
-    * [[add]]). The parent stays CORRECT (its lineage recomputes on
-    * demand), it just stops being cheap. */
-  private def maintained(db: VectorDB)(
-      f: Dataset[HnswIndex.IndexRow] => Dataset[HnswIndex.IndexRow]): VectorDB = {
-    if (!servesCompressed) index.foreach { idx =>
-      val next = f(idx)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      idx.unpersist(blocking = false)
-      db.index = Some(next)
-      db.indexMetric = indexMetric
-      db.ivfModel = ivfModel
-      db.mipsMaxNormSq = mipsMaxNormSq
-      // in-bound maintenance reduces batches with the artifact's stored
-      // geometry, so the derived handle keeps its merge compatibility
-      db.sharedTraining = sharedTraining
-    }
-    db
-  }
-
-  /** Derived handles keep this handle's serving knobs — losing the
-    * tuning on every add/remove would silently revert a maintained (or
-    * rebuilt) index to default nprobe/efSearch. */
-  private def tuned(db: VectorDB): VectorDB = {
-    db.nprobe = nprobe
-    db.efSearch = efSearch
-    db.adaptiveAlpha = adaptiveAlpha
-    db.intendedMetric = intendedMetric
-    db.ivfBuildParams = ivfBuildParams
-    db.pqBuildParams = pqBuildParams
-    db.sqBuildParams = sqBuildParams
-    db.opqBuildParams = opqBuildParams
-    // remove-derived handles keep every corpus column, so exact-arm
-    // searchWhere can still pack the declared payload attributes
-    // (add-derived handles keep only id+vec — a payload predicate
-    // there fails analysis loudly rather than matching nothing)
-    db.servedPayloadCols = servedPayloadCols
-    db
   }
 
   /** Top-k search: ANN when an index is built (under the index's
@@ -1493,29 +1011,11 @@ final class VectorDB private (
           if (rows.length > localCellRowCap) None
           else Some((
             rows.map(_.getLong(0)),
-            rows.map[ArrayData] { r =>
-              if (bqState.isDefined) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)
-              else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Int](1).toArray)
-            }))
+            rows.map(r => state.artifact.get.decodeRow(r, 1))))
         if (localCodeCells.size >= maxLocalCells)
           localCodeCells.remove(localCodeCells.head._1)
         localCodeCells.put(c, v)
         v
-    }
-
-  /** The distributed compressed arm's distance ([[adcDist]]) as a
-    * driver-side function of one code row: the same [[Kernels]] method
-    * over the same model arrays, so local and distributed distances are
-    * equal by construction. `q` is the reduced query. */
-  private def localAdc(q: ArrayData): ArrayData => Double =
-    pqState.map { case (_, m) =>
-      (codes: ArrayData) => Kernels.pqAdc(codes, q, m.flat, m.numSub, m.k, m.subDim)
-    }.orElse(sqState.map { case (_, lo, hi) =>
-      val (l, h) = (lo.toArray, hi.toArray)
-      (codes: ArrayData) => Kernels.sqAdc(codes, q, l, h)
-    }).getOrElse {
-      val packed = Kernels.signPack(q, codesWidth)
-      (codes: ArrayData) => Kernels.hamming(codes, packed).toDouble
     }
 
   /** Driver-local point-query serving — the reference's headline shape
@@ -1554,23 +1054,23 @@ final class VectorDB private (
       search(queryVec, k).select(col(idCol), col("dist")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
         .sortBy { case (id, d) => (d, id) }
-    if (servesCompressed && ivfModel.isDefined) {
+    if (servesCompressed && state.router.isDefined) {
       require(queryVec.length == dims,
         s"query dimension mismatch: expected $dims, got ${queryVec.length}")
       // searchImpl's compressed arm, driver-side: same reduced query,
       // same fixed-nprobe probe order, same ADC kernel, same (dist, id)
       // ascending cut
       val rq = reduceQueryVec(queryVec)
-      val probes = ivfModel.get.probeOrder(rq).take(nprobe)
+      val probes = state.router.get.probeOrder(rq).take(nprobe)
       val cells = probes.map(localCodeCell)
       if (cells.exists(_.isEmpty)) return distributed()
-      val adc = localAdc(UnsafeArrayData.fromPrimitiveArray(rq))
+      val adc = state.artifact.get.localAdc(UnsafeArrayData.fromPrimitiveArray(rq))
       return cells.flatMap { cOpt =>
         val (ids, codes) = cOpt.get
         ids.indices.map(i => (ids(i), adc(codes(i))))
       }.sortBy { case (id, d) => (d, id) }.take(k).toSeq
     }
-    val eligible = index.isDefined && ivfModel.isDefined && !servesCompressed
+    val eligible = index.isDefined && state.router.isDefined && !servesCompressed
     if (!eligible) return distributed()
     require(queryVec.length == dims,
       s"query dimension mismatch: expected $dims, got ${queryVec.length}")
@@ -1578,21 +1078,21 @@ final class VectorDB private (
     // selection and the graph walk both run in the index's space
     val rq = reduceQueryVec(queryVec)
     val q = UnsafeArrayData.fromPrimitiveArray(rq)
-    val router = ivfModel.get
+    val router = state.router.get
     val probes = adaptiveAlpha match {
       case Some(a) => router.probeAdaptive(rq, a, nprobe)
       case None    => router.probeOrder(rq).take(nprobe)
     }
     val cells = probes.map(localCell)
     if (cells.exists(_.isEmpty)) return distributed()
-    val rescored = indexMetric != Knn.L2
+    val rescored = metric != Knn.L2
     val fetchK = if (rescored) k + 8 else k
     val ef = if (efSearch > 0) efSearch else math.max(params.efConstruction, fetchK)
     cells.flatMap(_.get).flatMap { case (ids, g) =>
       g.searchEf(rq, fetchK, ef).map { case (ord, d) =>
         // exactDist's kernels: 1 − cosine, −dot
         def stored = UnsafeArrayData.fromPrimitiveArray(g.vectorAt(ord))
-        val dist = indexMetric match {
+        val dist = metric match {
           case Knn.Cosine => 1.0 - Kernels.cosine(stored, q)
           case Knn.Dot    => -Kernels.dot(stored, q)
           case _          => d
@@ -1674,7 +1174,7 @@ final class VectorDB private (
     val vecs = vectors.filter(col(idCol).isin(fetched.map(_._1).toSeq: _*))
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val sim = intendedMetric match {
+    val sim = metric match {
       case Knn.Cosine => graft.operators.Mmr.cosineSim
       case Knn.Dot    => graft.operators.Mmr.dotSim
       case _          => graft.operators.Mmr.l2Sim
@@ -1703,7 +1203,7 @@ final class VectorDB private (
       .filter(col(idCol).isin(fetched.map(_._2).distinct.toSeq: _*))
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val sim = intendedMetric match {
+    val sim = metric match {
       case Knn.Cosine => graft.operators.Mmr.cosineSim
       case Knn.Dot    => graft.operators.Mmr.dotSim
       case _          => graft.operators.Mmr.l2Sim
@@ -1775,12 +1275,12 @@ final class VectorDB private (
     if (servesCompressed) {
       adcServeBatch(q, k, pred)
     } else index match {
-      case Some(idx) if indexMetric == Knn.Cosine || indexMetric == Knn.Dot =>
+      case Some(idx) if metric == Knn.Cosine || metric == Knn.Dot =>
         rescoredServe(idx, q, k, pred)
       case Some(idx) =>
         HnswIndex.search(idx, q, k, params,
           efSearch = filteredEf(k, pred.isDefined),
-          router = ivfModel, nprobe = nprobe, adaptiveAlpha = routedAlpha,
+          router = state.router, nprobe = nprobe, adaptiveAlpha = routedAlpha,
           candidateFilter = pred,
           routerGraph = routerGraphOpt, routerEf = graphRouteEf)
           .select(col("qid"), col("rank"), col("vector_id").as(idCol), col("dist"))
@@ -1790,30 +1290,27 @@ final class VectorDB private (
             .withColumn("payload", exactPayExpr)
             .filter(p)
         }.getOrElse(vectors)
-        Knn.knnJoin(base, q, k, idCol, vecCol, "qid", "qv", metric = intendedMetric)
+        Knn.knnJoin(base, q, k, idCol, vecCol, "qid", "qv", metric = metric)
     }
   }
 
-  /** The compressed-codes table being served (PQ or SQ). */
-  private def codesTable: DataFrame =
-    pqState.map(_._1).orElse(sqState.map(_._1)).orElse(bqState).get
+  /** The compressed-codes table being served. */
+  private def codesTable: DataFrame = state.table.get
 
-  /** The served codes table, when compressed — package-private so the
-    * specs can assert maintenance shape (appended codes must reuse the
-    * cached parent generation, never re-encode the resident corpus). */
+  /** The served table (index rows or codes rows) — package-private so
+    * the specs can assert maintenance and plan shape. */
+  private[graft] def servedTable: Option[DataFrame] = state.table
+
+  /** The served codes table, when compressed (appended codes must reuse
+    * the cached parent generation, never re-encode the resident
+    * corpus). */
   private[graft] def servedCodes: Option[DataFrame] =
-    pqState.map(_._1).orElse(sqState.map(_._1)).orElse(bqState)
+    servedTable.filter(_ => servesCompressed)
 
   /** Asymmetric (ADC) distance of each codes row to the full-precision
     * query column `qv` — the query never quantizes, only the corpus. */
   private def adcDist(qv: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pqState.map { case (_, m) => ProductQuantizer.adcExpr(col("codes"), qv, m) }
-      .orElse(sqState.map { case (_, lo, hi) =>
-        ScalarQuantizer.adcL2Sq(col("codes"), qv, lo, hi) })
-      .orElse(bqState.map { _ =>
-        graft.index.BinaryQuant.hammingExpr(col("codes"),
-          graft.index.BinaryQuant.packExpr(qv, codesWidth)).cast("double") })
-      .get
+    state.artifact.get.adcExpr(col("codes"), qv)
 
   /** Batch ADC serving: map every query into the index's serving space
     * (driver-side — [[reduceQueryVec]]), route it to its nprobe cells
@@ -1827,7 +1324,7 @@ final class VectorDB private (
       pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val router = ivfModel.getOrElse(throw new IllegalStateException(
+    val router = state.router.getOrElse(throw new IllegalStateException(
       "compressed serving requires the trained router"))
     val qRows = q.as[(Long, Array[Float])].collect()
       .map { case (qid, qv) => (qid, reduceQueryVec(qv.toSeq)) }
@@ -1864,12 +1361,12 @@ final class VectorDB private (
   /** The payload map for the EXACT arm, packed on the fly from the
     * build-time payload columns. */
   private def exactPayExpr: org.apache.spark.sql.Column =
-    payExpr(servedPayloadCols)
+    payExpr(state.payloadCols)
 
   private def searchImpl(queryVec: Seq[Float], k: Int,
       pred: Option[org.apache.spark.sql.Column]): DataFrame =
     if (servesCompressed) {
-      val router = ivfModel.getOrElse(throw new IllegalStateException(
+      val router = state.router.getOrElse(throw new IllegalStateException(
         "compressed serving requires the trained router"))
       val rq = reduceQueryVec(queryVec)
       val probes = router.probeOrder(rq).take(nprobe).toSeq
@@ -1881,7 +1378,7 @@ final class VectorDB private (
         .orderBy(col("dist").asc, col(idCol).asc)
         .limit(k)
     } else index match {
-      case Some(idx) if indexMetric == Knn.Cosine || indexMetric == Knn.Dot =>
+      case Some(idx) if metric == Knn.Cosine || metric == Knn.Dot =>
         val spark = vectors.sparkSession
         val q = spark.range(1).select(lit(0L).as("qid"),
           typedLit(queryVec).cast("array<float>").as("qv"))
@@ -1894,7 +1391,7 @@ final class VectorDB private (
         // every arm serves the id under idCol — a caller must not have
         // to know which dispatch arm answered
         HnswIndex.search(idx, q, k, params, efSearch = filteredEf(k, pred.isDefined),
-          router = ivfModel, nprobe = nprobe, adaptiveAlpha = routedAlpha,
+          router = state.router, nprobe = nprobe, adaptiveAlpha = routedAlpha,
           candidateFilter = pred,
           routerGraph = routerGraphOpt, routerEf = graphRouteEf)
           .select(col("vector_id").as(idCol), col("dist"))
@@ -1904,7 +1401,7 @@ final class VectorDB private (
             .withColumn("payload", exactPayExpr)
             .filter(p)
         }.getOrElse(vectors)
-        Knn.searchKnn(base, queryVec, k, idCol, vecCol, metric = intendedMetric)
+        Knn.searchKnn(base, queryVec, k, idCol, vecCol, metric = metric)
     }
 
   /** Persist the FULL serving state — not just the index rows
@@ -1918,17 +1415,21 @@ final class VectorDB private (
     * materialize their corpus under `path/corpus` — the one case where
     * a corpus-scale write is the point of the call). */
   def save(path: String): Unit = {
-    if (index.isEmpty && !servesCompressed)
+    if (state.table.isEmpty)
       throw new IllegalStateException(
         "save requires a built index — call buildIndex/buildIndexIvf/buildIndexPq/buildIndexSq/buildIndexBq first")
     val spark = raw.sparkSession
     import spark.implicits._
+    val s = state
     index.foreach(idx => HnswIndex.save(idx, s"$path/index"))
     // compressed serving state: the codes table persists CELL-
     // PARTITIONED (probe pruning applies to the restored layout too)
-    // plus the model that decodes it
-    pqState.foreach { case (codes, model) =>
-      codes.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    // plus the model that decodes it (binary codes carry none — the
+    // packed words table IS the state)
+    if (servesCompressed)
+      codesTable.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    val a = s.artifact.filter(_.compressed)
+    a.flatMap(_.pqModel).foreach { model =>
       val rows = for {
         m <- model.codebooks.indices
         j <- model.codebooks(m).indices
@@ -1936,72 +1437,72 @@ final class VectorDB private (
       rows.toDF("m", "j", "v")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
     }
-    sqState.foreach { case (codes, lo, hi) =>
-      codes.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    a.flatMap(_.sqBounds).foreach { case (lo, hi) =>
       lo.indices.map(i => (i, lo(i), hi(i))).toDF("pos", "lo", "hi")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
     }
-    // binary codes carry no model — the packed words table IS the state
-    bqState.foreach(_.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes"))
     def writeRouter(m: IvfIndex.Model, dest: String): Unit =
       m.centroids.indices
         .map(i => (i, m.cellId(i), m.centroids(i).toSeq))
         .toDF("ord", "cell", "cv")
         .coalesce(1).write.mode("overwrite").parquet(dest)
-    ivfModel.foreach(writeRouter(_, s"$path/router"))
+    s.router.foreach(writeRouter(_, s"$path/router"))
     // a merged shared HNSW handle SERVES a router re-derived from the
-    // merged layout (mergeShared's ivf arm) while its artifact keeps
-    // the TRAINED router that t.fingerprint hashes — persist the
-    // artifact's own router separately whenever the two diverge, or
-    // load's reassembly-fingerprint integrity check would reject a
-    // legitimate save (compressed handles never diverge: their
-    // serving router IS t.router, so this writes nothing for them)
-    sharedTraining.foreach { t =>
-      if (!ivfModel.exists(VectorDB.sameRouter(_, t.router)))
+    // merged layout while its artifact keeps the TRAINED router that
+    // t.fingerprint hashes — persist the artifact's own router
+    // separately whenever the two diverge, or load's
+    // reassembly-fingerprint integrity check would reject a legitimate
+    // save (compressed shared handles never diverge: their serving
+    // router IS t.router, so this writes nothing for them)
+    val shared = s.artifact.filter(_ => s.shared)
+    shared.foreach { t =>
+      if (!s.router.exists(VectorDB.sameRouter(_, t.router)))
         writeRouter(t.router, s"$path/shared_router")
     }
     val corpusRef = sourcePath.getOrElse {
       raw.write.mode("overwrite").parquet(s"$path/corpus")
       s"$path/corpus"
     }
-    val compressed =
-      if (pqState.isDefined) "pq" else if (sqState.isDefined) "sq"
-      else if (bqState.isDefined) "bq" else "none"
+    val mode = s.artifact.map(_.mode).getOrElse("ivf")
+    val shape = s.shape.map(b =>
+      if (mode == "pq" || mode == "opq")
+        Seq(b.numCells, b.iters, b.numSub, b.codebookK, b.pqIters)
+      else Seq(b.numCells, b.iters))
     val meta = Seq(
-      s"dims=$dims", s"metric=$indexMetric", s"intendedMetric=$intendedMetric",
-      s"nprobe=$nprobe", s"efSearch=$efSearch",
+      s"dims=$dims", s"metric=$metric", s"intendedMetric=$metric",
+      s"nprobe=$nprobe", s"efSearch=$efSearch", s"graphRouteEf=$graphRouteEf",
       s"m=${params.m}", s"efConstruction=${params.efConstruction}",
       s"idCol=$idCol", s"vecCol=$vecCol", s"corpus=$corpusRef",
-      s"hasIndex=${index.isDefined}", s"compressed=$compressed",
-      s"payloadCols=${servedPayloadCols.mkString(",")}",
+      s"hasIndex=${index.isDefined}",
+      s"compressed=${a.map(t => if (t.mode == "opq") "pq" else t.mode).getOrElse("none")}",
+      s"payloadCols=${s.payloadCols.mkString(",")}",
       s"adaptiveAlpha=${adaptiveAlpha.map(_.toString).getOrElse("")}",
-      s"mipsMaxNormSq=${mipsMaxNormSq.map(_.toString).getOrElse("")}",
-      s"ivfParams=${ivfBuildParams.map { case (a, b) => s"$a,$b" }.getOrElse("")}",
-      s"pqParams=${pqBuildParams.map { case (a, b, c, d, e) => s"$a,$b,$c,$d,$e" }.getOrElse("")}",
-      s"sqParams=${sqBuildParams.map { case (a, b) => s"$a,$b" }.getOrElse("")}",
-      s"bqParams=${bqBuildParams.map { case (a, b) => s"$a,$b" }.getOrElse("")}",
-      s"opqParams=${opqBuildParams.map { case (a, b, c, d, e) => s"$a,$b,$c,$d,$e" }.getOrElse("")}",
-      s"opqPerm=${opqPerm.map(_.mkString(",")).getOrElse("")}",
-      // shared-artifact handles stay MERGEABLE across a save/load
-      // round-trip: every component (router, codebooks/bounds, perm,
-      // max-norm) is already persisted above; the mode marker tells
-      // load to re-assemble them, and the stored fingerprint is an
-      // integrity check against the recomputed one
-      s"shared=${sharedTraining.map(_.mode).getOrElse("")}",
-      s"sharedWidth=${sharedTraining.map(_.width.toString).getOrElse("")}",
-      s"sharedFingerprint=${sharedTraining.map(_.fingerprint).getOrElse("")}",
-      s"hasRouter=${ivfModel.isDefined}").mkString("", "\n", "\n")
+      s"mipsMaxNormSq=${s.artifact.flatMap(_.mipsMaxNormSq).map(_.toString).getOrElse("")}") ++
+      // the recorded build shape, under its mode's key
+      Seq("ivf", "pq", "sq", "bq", "opq").map(m =>
+        s"${m}Params=${shape.filter(_ => m == mode).map(_.mkString(",")).getOrElse("")}") ++
+      Seq(
+        s"opqPerm=${s.artifact.flatMap(_.opqPerm).map(_.mkString(",")).getOrElse("")}",
+        // shared-artifact handles stay MERGEABLE across a save/load
+        // round-trip: every component (router, codebooks/bounds, perm,
+        // max-norm) is already persisted above; the mode marker tells
+        // load to re-assemble them, and the stored fingerprint is an
+        // integrity check against the recomputed one
+        s"shared=${shared.map(_.mode).getOrElse("")}",
+        s"sharedWidth=${shared.map(_.width.toString).getOrElse("")}",
+        s"sharedFingerprint=${shared.map(_.fingerprint).getOrElse("")}",
+        s"hasRouter=${s.router.isDefined}")
     val p = new org.apache.hadoop.fs.Path(path, "graft_meta")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(meta.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
   /** [[adaptiveAlpha]] applies only to ROUTED search (HnswIndex.search
     * requires a router with it). */
   private def routedAlpha: Option[Double] =
-    if (ivfModel.isDefined) adaptiveAlpha else None
+    if (state.router.isDefined) adaptiveAlpha else None
 
   /** Default beam width, widened under a candidate filter: filtered-out
     * rows still occupy beam slots, so the unfiltered default
@@ -2036,7 +1537,7 @@ final class VectorDB private (
       candidateFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val qReduced = indexMetric match {
+    val qReduced = metric match {
       case Knn.Dot => qRaw.select(col("qid"),
         concat(col("qv").cast("array<float>"), array(lit(0.0f))).as("qv"))
       case _ => qRaw.select(col("qid"), l2Normalize(col("qv")).as("qv"))
@@ -2054,7 +1555,7 @@ final class VectorDB private (
       val ef = if (baseEf > 0) math.max(baseEf, k + margin) else baseEf
       val pairs = HnswIndex.search(idx, qReduced, k + margin, params,
           efSearch = ef,
-          router = ivfModel, nprobe = nprobe, adaptiveAlpha = routedAlpha,
+          router = state.router, nprobe = nprobe, adaptiveAlpha = routedAlpha,
           candidateFilter = candidateFilter,
           routerGraph = routerGraphOpt, routerEf = graphRouteEf)
         .select(col("qid"), col("vector_id")).collect()
@@ -2070,7 +1571,7 @@ final class VectorDB private (
         .join(broadcast(hits), Seq(idCol))
         .join(broadcast(qRaw), Seq("qid"))
         .select(col("qid"), col(idCol),
-          (if (indexMetric == Knn.Dot) -dotNative(col(vecCol), col("qv"))
+          (if (metric == Knn.Dot) -dotNative(col(vecCol), col("qv"))
            else lit(1.0d) - cosineNative(col(vecCol), col("qv"))).as("dist"))
         .withColumn("rank", row_number().over(w))
       // boundary-tie check on the re-scored edge rows (a tiny collect):
@@ -2095,6 +1596,59 @@ final class VectorDB private (
 }
 
 object VectorDB {
+  /** One handle's serving state:
+    *  - `metric`: the metric the user chose (the exact arm serves it
+    *    when no table is built);
+    *  - `artifact`: the trained serving geometry (router, codebooks or
+    *    bounds, OPQ permutation, dot max-norm) and the only reader and
+    *    writer of the serving space; `shared` when it came from
+    *    [[VectorDB#buildIndexShared]] (or [[VectorDB#reshare]]), the
+    *    status merges check;
+    *  - `router`: the SERVING router, which compact, rebalance, merge
+    *    and split re-derive away from the trained one;
+    *  - `table`: the served HNSW index rows or codes rows, with the
+    *    `payloadCols` packed into them;
+    *  - `shape`: the build configuration a bound-expanding add replays.
+    */
+  private final case class Serving(
+      metric: String = Knn.L2,
+      artifact: Option[graft.index.SharedTraining] = None,
+      shared: Boolean = false,
+      router: Option[IvfIndex.Model] = None,
+      table: Option[DataFrame] = None,
+      payloadCols: Seq[String] = Nil,
+      shape: Option[BuildShape] = None) {
+    val compressed: Boolean = table.isDefined && artifact.exists(_.compressed)
+    /** Typed once per value: the point-query path asks for it on every
+      * query, and building a Dataset runs analysis. */
+    lazy val index: Option[Dataset[HnswIndex.IndexRow]] =
+      if (compressed) None else table.map(indexRows)
+  }
+
+  /** The user's build configuration: cell count and router iterations
+    * for every mode, plus the codebook shape for PQ/OPQ. */
+  private final case class BuildShape(numCells: Int, iters: Int, numSub: Int = 8,
+      codebookK: Int = 16, pqIters: Int = 0)
+
+  private def indexRows(table: DataFrame): Dataset[HnswIndex.IndexRow] =
+    table.as[HnswIndex.IndexRow](org.apache.spark.sql.Encoders.product[HnswIndex.IndexRow])
+
+  /** One generation step — the only way a derived handle's served
+    * table is made. `f` computes the next table from the parents, each
+    * read through a leaf over its cached rows
+    * ([[org.apache.spark.sql.graft.CheckpointBridge.leaf]]); the result
+    * is persisted and materialized, and only then are the parents
+    * released. Because the leaf hides the parent's plan, the plan of
+    * the n-th generation is as large as the first's, and because the
+    * leaf keeps its lineage, a lost cache block still recomputes. */
+  private def generation(parents: Seq[DataFrame])(f: Seq[DataFrame] => DataFrame): DataFrame = {
+    val next = f(parents.map(CheckpointBridge.leaf(_)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    next.count()
+    parents.foreach(_.unpersist(blocking = false))
+    next
+  }
+
   /** Content equality of two routers (centroid vectors + cell-id
     * layout) — the save-side test for whether a shared handle's
     * SERVING router still IS its artifact's trained router. */
@@ -2166,42 +1720,8 @@ object VectorDB {
     val db = new VectorDB(spark.read.parquet(meta("corpus")), meta("dims").toInt,
       params, meta("idCol"), meta("vecCol"))
     db.sourcePath = Some(meta("corpus"))
-    // pre-r7 manifests have no hasIndex/compressed keys (HNSW always)
-    if (meta.getOrElse("hasIndex", "true").toBoolean)
-      db.index = Some(HnswIndex.load(spark, s"$path/index"))
-    db.servedPayloadCols =
-      meta.getOrElse("payloadCols", "").split(",").filter(_.nonEmpty).toSeq
-    // pre-r9 codes parquets carry no payload column — restore an empty
-    // map so the served schema is uniform
-    def codesCompat(): DataFrame = {
-      val raw = spark.read.parquet(s"$path/codes")
-      val pay =
-        if (raw.columns.contains("payload")) col("payload")
-        else typedLit(Map.empty[String, String]).as("payload")
-      raw.select(col(meta("idCol")), col("cell").cast("int").as("cell"),
-        col("codes"), pay)
-    }
-    meta.getOrElse("compressed", "none") match {
-      case "pq" =>
-        val codes = codesCompat()
-        val rows = spark.read.parquet(s"$path/pq")
-          .select(col("m").cast("int"), col("j").cast("int"),
-            col("v").cast("array<double>"))
-          .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        val books = rows.groupBy(_._1).toArray.sortBy(_._1)
-          .map { case (_, js) => js.sortBy(_._2).map(_._3) }
-        db.pqState = Some((codes, ProductQuantizer.Model(books)))
-      case "sq" =>
-        val codes = codesCompat()
-        val rows = spark.read.parquet(s"$path/sq")
-          .select(col("pos").cast("int"), col("lo"), col("hi"))
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-          .sortBy(_._1)
-        db.sqState = Some((codes, rows.map(_._2).toSeq, rows.map(_._3).toSeq))
-      case "bq" =>
-        db.bqState = Some(codesCompat())
-      case _ => ()
-    }
+    def ints(key: String): Option[Array[Int]] =
+      meta.get(key).filter(_.nonEmpty).map(_.split(",").map(_.toInt))
     def readRouter(dest: String): IvfIndex.Model = {
       val rows = spark.read.parquet(dest)
         .select(col("ord").cast("int"), col("cell").cast("int"),
@@ -2214,50 +1734,85 @@ object VectorDB {
         if (cellIds.zipWithIndex.forall { case (c, i) => c == i }) Array.empty
         else cellIds)
     }
-    if (meta("hasRouter").toBoolean)
-      db.ivfModel = Some(readRouter(s"$path/router"))
-    db.indexMetric = meta("metric")
-    db.intendedMetric = meta("intendedMetric")
-    db.nprobe = meta("nprobe").toInt
-    db.efSearch = meta("efSearch").toInt
-    db.adaptiveAlpha = meta.get("adaptiveAlpha").filter(_.nonEmpty).map(_.toDouble)
-    db.mipsMaxNormSq = meta.get("mipsMaxNormSq").filter(_.nonEmpty).map(_.toDouble)
-    def ints(key: String): Option[Array[Int]] =
-      meta.get(key).filter(_.nonEmpty).map(_.split(",").map(_.toInt))
-    db.ivfBuildParams = ints("ivfParams").map(a => (a(0), a(1)))
-    db.pqBuildParams = ints("pqParams").map(a => (a(0), a(1), a(2), a(3), a(4)))
-    db.sqBuildParams = ints("sqParams").map(a => (a(0), a(1)))
-    db.bqBuildParams = ints("bqParams").map(a => (a(0), a(1)))
-    db.opqBuildParams = ints("opqParams").map(a => (a(0), a(1), a(2), a(3), a(4)))
-    db.opqPerm = ints("opqPerm")
-    // re-assemble the SharedTraining artifact from its persisted
-    // components so a loaded shard keeps its merge compatibility; the
-    // recomputed fingerprint must equal the saved one (doubles
+    // pre-r9 codes parquets carry no payload column — restore an empty
+    // map so the served schema is uniform
+    def codesCompat(): DataFrame = {
+      val raw = spark.read.parquet(s"$path/codes")
+      val pay =
+        if (raw.columns.contains("payload")) col("payload")
+        else typedLit(Map.empty[String, String]).as("payload")
+      raw.select(col(meta("idCol")), col("cell").cast("int").as("cell"),
+        col("codes"), pay)
+    }
+    // older manifests wrote the metric twice (index and intended); the
+    // two never differed on a saved handle
+    val metric = meta.getOrElse("intendedMetric", meta("metric"))
+    val router = if (meta("hasRouter").toBoolean) Some(readRouter(s"$path/router")) else None
+    val perm = ints("opqPerm")
+    val compressed = meta.getOrElse("compressed", "none")
+    val mode = compressed match {
+      case "pq" if perm.isDefined => "opq"
+      case "pq" | "sq" | "bq" => compressed
+      case _ => "ivf"
+    }
+    val pq = if (compressed != "pq") None else {
+      val rows = spark.read.parquet(s"$path/pq")
+        .select(col("m").cast("int"), col("j").cast("int"),
+          col("v").cast("array<double>"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      Some(ProductQuantizer.Model(rows.groupBy(_._1).toArray.sortBy(_._1)
+        .map { case (_, js) => js.sortBy(_._2).map(_._3) }))
+    }
+    val sq = if (compressed != "sq") None else {
+      val rows = spark.read.parquet(s"$path/sq")
+        .select(col("pos").cast("int"), col("lo"), col("hi"))
+        .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+        .sortBy(_._1)
+      Some((rows.map(_._2).toSeq, rows.map(_._3).toSeq))
+    }
+    // pre-r7 manifests have no hasIndex/compressed keys (HNSW always)
+    val table =
+      if (compressed != "none") Some(codesCompat())
+      else if (meta.getOrElse("hasIndex", "true").toBoolean)
+        Some(HnswIndex.load(spark, s"$path/index").toDF())
+      else None
+    // a shared manifest re-assembles its artifact from the persisted
+    // components — from the artifact's TRAINED router when save wrote
+    // one apart from the serving router — so a loaded shard keeps its
+    // merge compatibility
+    val shared = meta.get("shared").exists(_.nonEmpty)
+    val sharedRouterPath = new org.apache.hadoop.fs.Path(path, "shared_router")
+    val trainedRouter =
+      if (shared && fs.exists(sharedRouterPath)) Some(readRouter(sharedRouterPath.toString))
+      else router
+    if ((shared || compressed != "none") && trainedRouter.isEmpty)
+      throw new IllegalStateException("compressed or shared-artifact manifest without a persisted router")
+    val artifact = trainedRouter.map(r => graft.index.SharedTraining(
+      metric = metric, mode = mode, dims = db.dims,
+      width = meta.get("sharedWidth").filter(_.nonEmpty).map(_.toInt).getOrElse(
+        graft.index.SharedTraining.servingWidth(mode, metric, db.dims,
+          pq.map(_.numSub).getOrElse(1))),
+      router = r, pqModel = pq, sqBounds = sq, opqPerm = perm,
+      mipsMaxNormSq = meta.get("mipsMaxNormSq").filter(_.nonEmpty).map(_.toDouble)))
+    // the recomputed fingerprint must equal the saved one (doubles
     // round-trip parquet and Double.toString bit-exactly — a mismatch
     // means the artifact directory was tampered with or mixed)
-    meta.get("shared").filter(_.nonEmpty).foreach { mode =>
-      // a merged shared HNSW handle persists the artifact's TRAINED
-      // router separately from the serving one (save's divergence
-      // rule) — reassemble the artifact from it when present, so the
-      // fingerprint check verifies the artifact, not the serving state
-      val sharedRouterPath = new org.apache.hadoop.fs.Path(path, "shared_router")
-      val router =
-        if (fs.exists(sharedRouterPath)) readRouter(sharedRouterPath.toString)
-        else db.ivfModel.getOrElse(throw new IllegalStateException(
-          "shared-artifact manifest without a persisted router"))
-      val t = graft.index.SharedTraining(
-        metric = db.indexMetric, mode = mode, dims = db.dims,
-        width = meta("sharedWidth").toInt, router = router,
-        pqModel = db.pqState.map(_._2),
-        sqBounds = db.sqState.map { case (_, lo, hi) => (lo, hi) },
-        opqPerm = db.opqPerm, mipsMaxNormSq = db.mipsMaxNormSq)
+    if (shared) {
       val saved = meta.getOrElse("sharedFingerprint", "")
+      val t = artifact.get
       require(saved.isEmpty || saved == t.fingerprint,
         s"shared-training fingerprint mismatch on load: manifest says $saved, " +
           s"re-assembled artifact hashes to ${t.fingerprint} — the saved " +
           "components were altered or mixed across saves")
-      db.sharedTraining = Some(t)
     }
+    val shape = ints(s"${mode}Params").map(a =>
+      if (a.length == 5) BuildShape(a(0), a(1), a(2), a(3), a(4)) else BuildShape(a(0), a(1)))
+    db.state = Serving(metric, artifact, shared, router, table,
+      meta.getOrElse("payloadCols", "").split(",").filter(_.nonEmpty).toSeq, shape)
+    db.nprobe = meta("nprobe").toInt
+    db.efSearch = meta("efSearch").toInt
+    db.adaptiveAlpha = meta.get("adaptiveAlpha").filter(_.nonEmpty).map(_.toDouble)
+    db.graphRouteEf = meta.get("graphRouteEf").map(_.toInt).getOrElse(-1)
     db
   }
 }

@@ -627,7 +627,9 @@ object Dedup {
     * post-distinct survivors, so the array transfer it would save is
     * already deferred past the filter.
     *
-    * Output: (a, b, jac) with a < b.
+    * Output: (a, b, jac) with a < b, materialized as a local
+    * checkpoint so the persisted shingle table is released before
+    * return (the [[containmentJoin]] contract).
     */
   def jaccardJoin(
       docs: DataFrame,
@@ -641,50 +643,53 @@ object Dedup {
       .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inv = sh.select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
+    try {
+      val inv = sh.select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
 
-    val postings =
-      if (!prefixFilter) inv
-      else {
-        val freq = inv.groupBy("s").agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy("id").orderBy(col("df").asc, col("s").asc)
-        inv.join(freq, "s")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= col("n_sh") - ceil(col("n_sh") * lit(tau)) + 1)
-          .select("id", "n_sh", "s", "rn")
-      }
+      val postings =
+        if (!prefixFilter) inv
+        else {
+          val freq = inv.groupBy("s").agg(count(lit(1)).as("df"))
+          val w = Window.partitionBy("id").orderBy(col("df").asc, col("s").asc)
+          inv.join(freq, "s")
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") <= col("n_sh") - ceil(col("n_sh") * lit(tau)) + 1)
+            .select("id", "n_sh", "s", "rn")
+        }
 
-    // length filter: J(A,B) >= tau forces tau*|B| <= |A| <= |B|/tau —
-    // size-incompatible pairs never become candidates (exact)
-    val baseCond = col("x.s") === col("y.s") && col("x.id") < col("y.id") &&
-      col("x.n_sh") >= col("y.n_sh") * lit(tau) &&
-      col("y.n_sh") >= col("x.n_sh") * lit(tau)
-    // positional filter (PPJoin): a match at prefix positions (px, py)
-    // bounds the overlap by 1 + min(|A|-px, |B|-py). This prunes no
-    // qualifying pair: the globally-first common shingle s* lies inside
-    // both prefixes (prefix theorem), every other common shingle sorts
-    // after s* in BOTH docs' orderings (the order is one global
-    // df/lexicographic order), so overlap <= 1 + min suffix — and
-    // J >= tau forces overlap >= tau/(1+tau)·(|A|+|B|). The 1e-9 slack
-    // keeps double rounding from over-pruning at integer boundaries.
-    val cond =
-      if (!prefixFilter) baseCond
-      else baseCond &&
-        (lit(1) + least(col("x.n_sh") - col("x.rn"), col("y.n_sh") - col("y.rn")))
-          .cast("double") >= (col("x.n_sh") + col("y.n_sh")) * lit(tau / (1 + tau)) - lit(1e-9)
-    val cand = postings.as("x")
-      .join(postings.as("y"), cond)
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
+      // length filter: J(A,B) >= tau forces tau*|B| <= |A| <= |B|/tau —
+      // size-incompatible pairs never become candidates (exact)
+      val baseCond = col("x.s") === col("y.s") && col("x.id") < col("y.id") &&
+        col("x.n_sh") >= col("y.n_sh") * lit(tau) &&
+        col("y.n_sh") >= col("x.n_sh") * lit(tau)
+      // positional filter (PPJoin): a match at prefix positions (px, py)
+      // bounds the overlap by 1 + min(|A|-px, |B|-py). This prunes no
+      // qualifying pair: the globally-first common shingle s* lies inside
+      // both prefixes (prefix theorem), every other common shingle sorts
+      // after s* in BOTH docs' orderings (the order is one global
+      // df/lexicographic order), so overlap <= 1 + min suffix — and
+      // J >= tau forces overlap >= tau/(1+tau)·(|A|+|B|). The 1e-9 slack
+      // keeps double rounding from over-pruning at integer boundaries.
+      val cond =
+        if (!prefixFilter) baseCond
+        else baseCond &&
+          (lit(1) + least(col("x.n_sh") - col("x.rn"), col("y.n_sh") - col("y.rn")))
+            .cast("double") >= (col("x.n_sh") + col("y.n_sh")) * lit(tau / (1 + tau)) - lit(1e-9)
+      val cand = postings.as("x")
+        .join(postings.as("y"), cond)
+        .select(col("x.id").as("a"), col("y.id").as("b"))
+        .distinct()
 
-    cand
-      .join(sh.select(col("id").as("a"), col("sh").as("sha")), "a")
-      .join(sh.select(col("id").as("b"), col("sh").as("shb")), "b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jac", col("inter").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"))
-      .filter(col("jac") >= tau)
-      .select(col("a"), col("b"), col("jac"))
+      cand
+        .join(sh.select(col("id").as("a"), col("sh").as("sha")), "a")
+        .join(sh.select(col("id").as("b"), col("sh").as("shb")), "b")
+        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+        .withColumn("jac", col("inter").cast("double") /
+          (size(col("sha")) + size(col("shb")) - col("inter")).cast("double"))
+        .filter(col("jac") >= tau)
+        .select(col("a"), col("b"), col("jac"))
+        .localCheckpoint() // materialize before releasing the shingle cache
+    } finally sh.unpersist(blocking = false)
   }
 
   /** DIRECTED containment similarity join — the asymmetric near-dup

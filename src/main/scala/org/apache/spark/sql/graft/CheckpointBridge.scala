@@ -29,6 +29,21 @@ object CheckpointBridge {
     case _ => ()
   }
 
+  /** `ds` re-read through a LogicalRDD leaf over the rows its plan
+    * produces — its cached blocks when `ds` is persisted. This is the
+    * shape `Dataset.checkpoint` builds, without truncating lineage:
+    * the leaf's RDD still recomputes from `ds`'s plan when blocks are
+    * lost, but a plan built on the leaf never nests `ds`'s plan, so a
+    * chain of derived generations keeps a constant plan size. */
+  def leaf[T](ds: Dataset[T]): Dataset[T] = ds match {
+    case c: ClassicDataset[T] =>
+      // a fresh QueryExecution, so the cache lookup sees `ds`'s entry
+      // even when `ds` itself was planned before it was persisted
+      val fresh = ClassicDataset.ofRows(c.sparkSession, c.queryExecution.logical)
+      val rel = LogicalRDD.fromDataset(fresh.queryExecution.toRdd, fresh, c.isStreaming)
+      ClassicDataset.ofRows(c.sparkSession, rel).as[T](c.encoder)
+  }
+
   /** True when `ds` is itself a checkpoint (its plan root is a
     * LogicalRDD). */
   def isCheckpoint(ds: Dataset[_]): Boolean = ds match {

@@ -78,6 +78,21 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
+  test("jaccardJoin releases its shingle table; prefix and full-index arms agree") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.catalog.clearCache()
+    def pairs(prefix: Boolean) = {
+      val out = graft.operators.Dedup.jaccardJoin(docs, 0.8, prefixFilter = prefix)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"jaccardJoin(prefixFilter = $prefix) left its shingle table cached")
+      out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    val pruned = pairs(prefix = true)
+    val full = pairs(prefix = false)
+    assert(pruned.nonEmpty && pruned == full,
+      s"arms disagree: missing=${full -- pruned} extra=${pruned -- full}")
+  }
+
   // ---- MinHash estimator calibration ----
 
   test("estimatePairs: identical docs estimate 1.0; the K=16 estimate tracks exact Jaccard") {

@@ -1102,4 +1102,70 @@ class SparkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(moved == Map(0 -> (20L, 10L), 1 -> (20L, 30L)), moved.toString)
   }
+
+  test("served plan size is constant along an upsert chain (HNSW and PQ)") {
+    // each generation reads its parent through a leaf over the parent's
+    // cached rows, so the n-th generation's plan is the first's size
+    // (a plan that nested every ancestor grew ~30x per upsert)
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    def lines(db: VectorDB): Int =
+      db.servedTable.get.queryExecution.executedPlan.treeString.split("\n").length
+    def batch(g: Int) = e.filter(col("vec_id") % 50 === g).select("vec_id", "embedding")
+    val qv = e.filter(col("vec_id") === 3L).select("embedding").head().getSeq[Float](0)
+    Seq("hnsw", "pq").foreach { mode =>
+      val db = VectorDB.open(spark, s"$sfDir/embeddings.parquet", dims = 64, P)
+      if (mode == "hnsw") db.buildIndexIvf(numCells = 4, iters = 1)
+      else db.buildIndexPq(numCells = 4, routerIters = 1)
+      db.nprobe = 4
+      db.efSearch = 4096
+      val g1 = db.upsert(batch(1))
+      val first = lines(g1)
+      val g3 = g1.upsert(batch(2)).upsert(batch(3))
+      val third = lines(g3)
+      assert(third == first, s"$mode: served plan grew from $first to $third lines over 3 upserts")
+      assert(g3.len == 500L)
+      assert(g3.search(qv, 1).head().getLong(0) == 3L, s"$mode: the chain lost self-serving")
+    }
+  }
+
+  test("derived and reloaded handles keep the recorded build shape and every serving knob") {
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val inBound = e.filter(col("vec_id") < 3)
+      .select((col("vec_id") + 950000L).as("vec_id"), col("embedding"))
+    val big = spark.range(1).select(lit(990001L).as("vec_id"),
+      array_repeat(lit(9.9f), 64).as("embedding"))
+    def knobs(db: VectorDB) = (db.nprobe, db.efSearch, db.adaptiveAlpha, db.graphRouteEf)
+    def cells(db: VectorDB) = db.stats.head().getAs[Long]("n_cells")
+    Seq("ivf", "pq", "opq", "sq", "bq").foreach { mode =>
+      val db = VectorDB.open(spark, s"$sfDir/embeddings.parquet", dims = 64, P)
+      mode match {
+        case "ivf" => db.buildIndexIvf(numCells = 4, iters = 1, metric = Knn.Dot)
+        case "pq"  => db.buildIndexPq(numCells = 4, metric = Knn.Dot)
+        case "opq" => db.buildIndexOpq(numCells = 4, metric = Knn.Dot)
+        case "sq"  => db.buildIndexSq(numCells = 4, metric = Knn.Dot)
+        case "bq"  => db.buildIndexBq(numCells = 4, metric = Knn.Dot)
+      }
+      db.nprobe = 2
+      db.efSearch = 77
+      db.adaptiveAlpha = Some(1.5)
+      db.graphRouteEf = 2
+      val want = knobs(db)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-knobs-$mode").toString
+      db.save(dir)
+      // an in-bound add maintains; a norm-expanding add on ITS result
+      // rebuilds with the shape recorded at the first build
+      val grown = db.add(inBound)
+      val rebuilt = grown.add(big)
+      if (mode == "ivf") assert(cells(rebuilt) <= 4L, s"$mode rebuild ignored numCells = 4")
+      else assert(cells(rebuilt) == 4L, s"$mode rebuild ignored numCells = 4: ${cells(rebuilt)}")
+      val removed = rebuilt.remove(inBound.select("vec_id"))
+      val derived = Seq("add" -> grown, "rebuild" -> rebuilt, "remove" -> removed,
+        "compact" -> removed.compact(minCellSize = 1),
+        "load" -> VectorDB.load(spark, dir)) ++
+        (if (mode == "ivf") Seq("rebalance" -> removed.rebalance(maxCellSize = 4096)) else Nil)
+      derived.foreach { case (how, h) =>
+        assert(knobs(h) == want, s"$mode handle derived by $how lost its knobs: ${knobs(h)}")
+      }
+    }
+  }
 }
